@@ -32,6 +32,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _release(frame) -> None:
+    """Unpersist the banded frame a capped pair operator persisted at
+    build time (``_eo_persisted``; None when the plan was uncapped)."""
+    if getattr(frame, "_eo_persisted", None) is not None:
+        frame._eo_persisted.unpersist()
+
+
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
     return float(base[2:]) if base.startswith("sf") else -1.0
@@ -460,7 +467,11 @@ def run_queries() -> dict:
         from eo_tools_spark.operators.image_pipeline import phash_neardup
 
         def q9_full():
-            return phash_neardup(images, max_hamming=2).count()
+            pairs = phash_neardup(images, max_hamming=2)
+            try:
+                return pairs.count()
+            finally:
+                _release(pairs)
 
         n_phash_pairs = timed("q9_phash_neardup_full", q9_full, repeats=2)
 
@@ -479,10 +490,11 @@ def run_queries() -> dict:
                 F.col("caption").alias("text"),
             )
             sig = minhash_signatures(docs, num_hashes=64, shingle=2).persist()
+            pairs = lsh_pairs(sig, bands=16)
             try:
-                pairs = lsh_pairs(sig, bands=16)
                 return verify_jaccard(pairs, docs, threshold=0.8).count()
             finally:
+                _release(pairs)
                 sig.unpersist()
 
         n_minhash_pairs = timed("q8_minhash_lsh_dedup_full", q8_full, repeats=2)
@@ -514,6 +526,7 @@ def run_queries() -> dict:
             "q13_neardup_clusters_full", q13_full, repeats=2, max_repeats=2
         )
         pairs13.unpersist()
+        _release(pairs13)
 
         # q14 at full scale: winnowing fingerprints + capped posting
         # join over an n_images-doc (~3.5 kB each) corpus augmented
@@ -544,8 +557,7 @@ def run_queries() -> dict:
             try:
                 return cand.count()
             finally:
-                if cand._eo_persisted is not None:
-                    cand._eo_persisted.unpersist()
+                _release(cand)
 
         n_winnow_pairs = timed("q14_winnow_fingerprints_full", q14_full, repeats=2)
 
@@ -675,10 +687,11 @@ def run_queries() -> dict:
         # both self-join sides — 3 computations without it (the standard
         # pattern for expensive map-side signatures, see cap_hot_buckets)
         sig = minhash_signatures(docs, num_hashes=64, shingle=2).persist()
+        pairs = lsh_pairs(sig, bands=16)
         try:
-            pairs = lsh_pairs(sig, bands=16)
             return verify_jaccard(pairs, docs, threshold=0.8).count()
         finally:
+            _release(pairs)
             sig.unpersist()
 
     timed("q8_minhash_lsh_dedup", q8)
@@ -687,7 +700,11 @@ def run_queries() -> dict:
     def q9():
         from eo_tools_spark.operators.image_pipeline import phash_neardup
 
-        return phash_neardup(demo_slice, max_hamming=2).count()
+        pairs = phash_neardup(demo_slice, max_hamming=2)
+        try:
+            return pairs.count()
+        finally:
+            _release(pairs)
 
     timed("q9_phash_neardup", q9)
 
@@ -725,6 +742,7 @@ def run_queries() -> dict:
 
     cc_report["n_clusters"] = timed("q13_neardup_clusters", q13)
     q13_pairs.unpersist()
+    _release(q13_pairs)
 
     # q5 — ESD-style complex-mean aggregation
     def q5():
@@ -846,8 +864,7 @@ def run_queries() -> dict:
         try:
             return cand.count()
         finally:
-            if cand._eo_persisted is not None:
-                cand._eo_persisted.unpersist()
+            _release(cand)
 
     winnow_pairs_found = timed("q14_winnow_fingerprints", q14)
 

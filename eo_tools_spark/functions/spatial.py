@@ -17,7 +17,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, BooleanType, LongType
 
 from eo_tools_spark.geo import cells as C
 from eo_tools_spark.geo import geom as G
@@ -92,14 +92,6 @@ def cover_cells_udf(wkb_s: pd.Series, res_s: pd.Series) -> pd.Series:
     for wkb, res in zip(wkb_s, res_s):
         ring = W.wkb_to_coords(bytes(wkb))[0]
         out.append(C.cover_polygon(ring, int(res)).tolist())
-    return pd.Series(out)
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def wkb_bounds_udf(wkb_s: pd.Series) -> pd.Series:
-    out = []
-    for wkb in wkb_s:
-        out.append(list(W.wkb_bounds(bytes(wkb))))
     return pd.Series(out)
 
 

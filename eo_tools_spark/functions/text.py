@@ -73,22 +73,6 @@ def shingles(expr: str, n: int, dialect: str) -> str:
     )
 
 
-def jaccard_distinct_tokens(a_expr: str, b_expr: str, dialect: str) -> str:
-    """Jaccard of distinct word-token sets of two text expressions —
-    |∩| / |∪| as exact integer division in double."""
-    if dialect == "spark":
-        ta = f"array_distinct(split({a_expr}, ' '))"
-        tb = f"array_distinct(split({b_expr}, ' '))"
-        inter = f"size(array_intersect({ta}, {tb}))"
-        union = f"(size({ta}) + size({tb}) - {inter})"
-    else:
-        ta = f"list_distinct(string_split({a_expr}, ' '))"
-        tb = f"list_distinct(string_split({b_expr}, ' '))"
-        inter = f"len(list_filter({ta}, x -> list_contains({tb}, x)))"
-        union = f"(len({ta}) + len({tb}) - {inter})"
-    return f"CAST({inter} AS DOUBLE) / CAST({union} AS DOUBLE)"
-
-
 def stopword_hits(expr: str, lang: str, dialect: str) -> str:
     """Count of tokens that are stopwords of ``lang``."""
     words = ", ".join(f"'{w}'" for w in STOPWORDS[lang])

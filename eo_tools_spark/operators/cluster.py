@@ -2,8 +2,8 @@
 
 Dedup pipelines don't stop at PAIRS — to actually drop duplicates each
 document needs a canonical cluster id (keep min-id per component, drop
-the rest). This is the missing reduce after minhash_lsh_pairs /
-simhash_pairs / phash_neardup / embedding_neardup.
+the rest). This is the missing reduce after dedup.lsh_pairs /
+dedup.simhash_pairs / image_pipeline.phash_neardup.
 
 Algorithm: iterative min-label propagation, all DataFrame ops —
     label(v) ← min(label(v), min_{u ∈ N(v)} label(u))

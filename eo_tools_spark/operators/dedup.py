@@ -13,13 +13,19 @@ Operators:
 - lsh_pairs            banded LSH candidate pairs + exact-jaccard verify
 - simhash_signatures   64-bit simhash (mapInPandas)
 - simhash_pairs        hamming≤k near-dup pairs via chunk banding
-- embedding_neardup    cosine≥τ pairs via random-hyperplane LSH buckets
+- winnow_candidates    shared-fingerprint candidate pairs (winnowing)
+
+The pair operators (and ``image_pipeline.phash_neardup``) share one
+capped banded self-join core, ``_banded_self_join``; the hamming ones
+also share its first-match/popcount tail, ``_hamming_pairs``.
 """
 
 from __future__ import annotations
 
 import hashlib
 import logging
+import operator
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -33,15 +39,6 @@ from pyspark.sql.types import (
 )
 
 log = logging.getLogger("eo_tools_spark.dedup")
-
-
-#: label → drop report of the LAST cap_hot_buckets call with that label.
-#: Convenience only: two concurrent plans with the same label overwrite
-#: each other here — the collision-safe handle is the ``_eo_drop_report``
-#: attribute cap_hot_buckets attaches to the frame it returns (and that
-#: lsh_pairs / simhash_pairs / embedding_neardup / phash_neardup
-#: propagate to their outputs); pass THAT frame to drop_report().
-_drop_reports: dict[str, dict] = {}
 
 
 def cap_hot_buckets(
@@ -101,9 +98,9 @@ def cap_hot_buckets(
        monitoring.
 
     Scan accounting, honestly (signatures recompute per scan unless the
-    caller persists the frame upstream — an in-operator persist would
-    leak, since a lazy operator never owns an action to unpersist
-    after): no-skew = 1 build scan + 2 self-join scans (3, same as the
+    frame is persisted — the pair operators' core persists it and
+    exposes it for unpersist-after-action, see _banded_self_join):
+    no-skew = 1 build scan + 2 self-join scans (3, same as the
     round-2 lazy design, minus all anti-join work); broadcast-skew =
     2 build scans (stats + hot-key collect) + 2 action scans (4 — one
     more than round-2, buying a repeat-action-free local anti-join
@@ -215,7 +212,6 @@ def cap_hot_buckets(
             label, report["rows_dropped"], report["n_hot_buckets"],
             report["max_bucket_n"], max_bucket, report["anti_join"],
         )
-    _drop_reports[label] = report
     out._eo_drop_report = report
     return out
 
@@ -299,14 +295,12 @@ def self_join_probe_side(
     return banded.hint("merge")
 
 
-def drop_report(frame_or_label: "DataFrame | str") -> dict | None:
-    """Hot-bucket drop metrics. Pass the DataFrame returned by a capped
-    operator (collision-safe — the report rides on the frame), or a
-    label string for the LAST call with that label (convenience; racy
-    under concurrent same-label queries, see _drop_reports)."""
-    if isinstance(frame_or_label, str):
-        return _drop_reports.get(frame_or_label)
-    return getattr(frame_or_label, "_eo_drop_report", None)
+def drop_report(frame: DataFrame) -> dict | None:
+    """Hot-bucket drop metrics of the DataFrame returned by
+    cap_hot_buckets or a capped pair operator (the report rides on the
+    frame, so concurrent same-label queries cannot clobber it); None
+    when no cap ran."""
+    return getattr(frame, "_eo_drop_report", None)
 
 
 def hamming_band_cols(hash_col: str, max_hamming: int, min_width: int = 12) -> Column:
@@ -434,6 +428,130 @@ def first_match_band_pred(
     if not conds:  # c == 1: a single band cannot duplicate
         return F.lit(True)
     return F.expr("CASE " + " ".join(conds) + " ELSE true END")
+
+
+def _persist_if_eager(
+    frame: DataFrame, max_bucket: int | None
+) -> tuple[DataFrame, "DataFrame | None"]:
+    """Persist the exploded banded/chunk frame when an eager hot-bucket
+    cap will materialize it anyway (``max_bucket`` set): the counting
+    pass populates the cache and the two self-join sides then REUSE the
+    computed rows instead of re-running the explode (and whatever scan
+    feeds it) twice more — the same pattern winnow_candidates measured
+    at 7.3 s → ~4 s on its fingerprint frame. The frame is (id, band,
+    key) — three numeric/short columns, compact at any scale, and
+    MEMORY_AND_DISK is LRU-evictable so a leaked entry degrades, never
+    OOMs. Returned as the second element so callers can expose it as
+    ``out._eo_persisted`` for unpersist-after-action; ``max_bucket=
+    None`` (fully lazy plan) persists nothing."""
+    if max_bucket is None:
+        return frame, None
+    from pyspark import StorageLevel
+
+    p = frame.persist(StorageLevel.MEMORY_AND_DISK)
+    return p, p
+
+
+def _banded_self_join(
+    banded: DataFrame,
+    id_col: str,
+    key_cols: list[str],
+    max_bucket: int | None,
+    label: str,
+) -> tuple[DataFrame, dict | None, "DataFrame | None"]:
+    """THE capped banded self-join every pair operator runs: NULL-key
+    filter → persist → one-sided ``cap_hot_buckets`` → probe side by
+    measured size (``self_join_probe_side``) → equi-join on the band
+    keys with ``a.id < b.id``. Returns ``(joined, report, persisted)``:
+    the joined frame with sides aliased ``a``/``b``, the drop report
+    (None when uncapped) and the persisted banded frame (or None).
+    Callers add their own tail (distinct, groupBy, popcount verify) and
+    hand report and persisted on via ``_with_audit``.
+
+    EAGER BUILD: with ``max_bucket`` set, merely CONSTRUCTING the join
+    runs the hot-bucket counting job (1-2 scans of the banded frame) —
+    building a plan you never execute still pays it, and the collected
+    hot-key set / drop report snapshot the source AS OF build time (a
+    source mutated between build and action is not re-counted). The
+    banded frame is persisted for that job and both join sides; the
+    operator's output exposes it as ``_eo_persisted`` (unpersist after
+    the action) and the report as ``_eo_drop_report``.
+    ``max_bucket=None`` builds a fully lazy, uncapped plan that
+    persists nothing."""
+    banded = filter_null_keys(banded, key_cols)
+    banded, persisted = _persist_if_eager(banded, max_bucket)
+    capped = cap_hot_buckets(banded, key_cols, max_bucket, label)
+    report = drop_report(capped)
+    cond = reduce(
+        operator.and_,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    joined = capped.alias("a").join(
+        self_join_probe_side(banded, report).alias("b"), cond
+    )
+    return joined, report, persisted
+
+
+def _with_audit(
+    out: DataFrame, report: dict | None, persisted: "DataFrame | None"
+) -> DataFrame:
+    """Attach the core's drop report and persisted frame to ``out``."""
+    out._eo_drop_report = report
+    out._eo_persisted = persisted
+    return out
+
+
+def _hamming_pairs(
+    df: DataFrame,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int,
+    max_bucket: int | None,
+    label: str,
+) -> DataFrame:
+    """(id_a, id_b, hamming) pairs with hamming(hash) ≤ ``max_hamming``
+    over a 64-bit hash column — the shared body of simhash_pairs and
+    image_pipeline.phash_neardup.
+
+    Pigeonhole banding (``hamming_band_cols``) through the capped core,
+    then the exact popcount verify. Classic banding replaces the
+    candidate distinct by first-match emission (``first_match_band_pred``
+    — each pair leaves the join exactly once, no dedup exchange).
+    Under hot-bucket DROPS the plain predicate is unsound: a pair whose
+    earliest matching band sat in a dropped bucket must still be
+    emitted by a later intact band (found at sf1: 184.5M -> 140.8M
+    pairs). So when the cap's broadcast path COLLECTED the hot set, the
+    predicate gains per-band "OR key ∈ hot" membership and stays
+    exactly equal to the distinct's pair set; an uncollected or
+    oversized hot set (``hot_keys_by_band`` → None), like chunk-pair
+    banding, keeps the distinct. The popcount verify runs BEFORE
+    whichever dedup applies (guide §2.3); hamming is a pure function of
+    the pair, so the pair set is identical either way."""
+    chunks = df.select(
+        id_col,
+        hash_col,
+        hamming_band_cols(hash_col, max_hamming).alias("chunk", "ckey"),
+    )
+    cand, report, persisted = _banded_self_join(
+        chunks, id_col, ["chunk", "ckey"], max_bucket, label
+    )
+    xor = f"a.{hash_col} ^ b.{hash_col}"
+    # zero drops (or no cap): the plain predicate, no hot set needed
+    hot = hot_keys_by_band(report) if report and report["n_hot_buckets"] else {}
+    fm = None if hot is None else first_match_band_pred(
+        xor, "a.chunk", max_hamming, hash_expr=f"a.{hash_col}", hot_by_band=hot
+    )
+    if fm is not None:
+        cand = cand.where(fm)
+    out = cand.select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        F.bit_count(F.expr(xor)).alias("hamming"),
+    ).where(F.col("hamming") <= max_hamming)
+    if fm is None:
+        out = out.distinct()
+    return _with_audit(out, report, persisted)
 
 
 # deterministic affine family over uint64 (odd multipliers)
@@ -636,58 +754,17 @@ def lsh_pairs(
     exact_dedup first to canonicalize the exact-dup families that
     create such buckets.
 
-    EAGER BUILD: with ``max_bucket`` set, merely CONSTRUCTING this
-    frame runs the hot-bucket counting job (1-2 scans of the signature
-    stage) — building a plan you never execute still pays it, and the
-    collected hot-key set / drop report snapshot the source AS OF build
-    time (a source mutated between build and action is not re-counted).
-    Pass ``max_bucket=None`` for a fully lazy plan with no cap.
+    EAGER BUILD with ``max_bucket`` set (see ``_banded_self_join``);
+    ``max_bucket=None`` keeps the plan fully lazy.
     """
-    banded = sig_df.select(id_col, band_key_cols(bands))
-    banded = filter_null_keys(banded, ["band", "key"])
-    banded, persisted = _persist_if_eager(banded, max_bucket)
-    capped = cap_hot_buckets(banded, ["band", "key"], max_bucket, "lsh_pairs")
-    # one-sided cap (see cap_hot_buckets); probe-side strategy by
-    # MEASURED size (see self_join_probe_side — never Spark's estimate)
-    a = capped.alias("a")
-    b = self_join_probe_side(banded, drop_report(capped)).alias("b")
-    out = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    joined, report, persisted = _banded_self_join(
+        sig_df.select(id_col, band_key_cols(bands)),
+        id_col, ["band", "key"], max_bucket, "lsh_pairs",
     )
-    out._eo_drop_report = drop_report(capped)
-    out._eo_persisted = persisted
-    return out
-
-
-def _persist_if_eager(
-    frame: DataFrame, max_bucket: int | None
-) -> tuple[DataFrame, "DataFrame | None"]:
-    """Persist the exploded banded/chunk frame when an eager hot-bucket
-    cap will materialize it anyway (``max_bucket`` set): the counting
-    pass populates the cache and the two self-join sides then REUSE the
-    computed rows instead of re-running the explode (and whatever scan
-    feeds it) twice more — the same pattern winnow_candidates measured
-    at 7.3 s → ~4 s on its fingerprint frame. The frame is (id, band,
-    key) — three numeric/short columns, compact at any scale, and
-    MEMORY_AND_DISK is LRU-evictable so a leaked entry degrades, never
-    OOMs. Returned as the second element so callers can expose it as
-    ``out._eo_persisted`` for unpersist-after-action; ``max_bucket=
-    None`` (fully lazy plan) persists nothing."""
-    if max_bucket is None:
-        return frame, None
-    from pyspark import StorageLevel
-
-    p = frame.persist(StorageLevel.MEMORY_AND_DISK)
-    return p, p
+    out = joined.select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+    ).distinct()
+    return _with_audit(out, report, persisted)
 
 
 def winnow_fingerprints_fast(
@@ -784,42 +861,22 @@ def winnow_candidates(
     millions of docs at 100 TB) go through the same skew-immune
     ``cap_hot_buckets`` guard — counting pass, no-skew fast path,
     measured-size broadcast — instead of detonating the self-join.
-    Same EAGER-BUILD contract as lsh_pairs when ``max_bucket`` is set;
+    EAGER BUILD with ``max_bucket`` set (see ``_banded_self_join``);
     ``None`` builds a fully lazy, uncapped plan.
     """
-    f = _winnow_fp_frame(df, k, w, text_col, id_col, token_hash)
-    persisted = None
-    if max_bucket is not None:
-        # the cap's eager counting pass materializes the fingerprint
-        # frame anyway; persist it so the two self-join sides REUSE the
-        # computed fingerprints instead of re-running the kernel twice
-        # more (measured on the 27k-doc bench corpus: 7.3 s -> ~4 s;
-        # the frame is (id:int64, fp:int64) — compact at any scale).
-        # Exposed as `out._eo_persisted` so callers can unpersist after
-        # their action; harmless to leave (LRU-evictable).
-        from pyspark import StorageLevel
-
-        persisted = f.persist(StorageLevel.MEMORY_AND_DISK)
-        f = persisted
-    capped = cap_hot_buckets(f, ["fp"], max_bucket, "winnow")
-    a = capped.alias("a")
-    b = self_join_probe_side(f, drop_report(capped)).alias("b")
+    joined, report, persisted = _banded_self_join(
+        _winnow_fp_frame(df, k, w, text_col, id_col, token_hash),
+        id_col, ["fp"], max_bucket, "winnow",
+    )
     out = (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
+        joined.groupBy(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
-    out._eo_drop_report = drop_report(capped)
-    out._eo_persisted = persisted
-    return out
+    return _with_audit(out, report, persisted)
 
 
 def _winnow_fp_frame(
@@ -1039,155 +1096,13 @@ def simhash_pairs(
 
     Pigeonhole banding (hamming_band_cols): chunk equality (or
     chunk-pair equality for narrow chunks) → candidates, then exact
-    popcount verify (JVM bit ops). Hot buckets (degenerate simhashes,
-    e.g. boilerplate) are capped with an observe-metric drop
-    (cap_hot_buckets; audit via drop_report).
+    popcount verify (JVM bit ops; see ``_hamming_pairs``). Hot buckets
+    (degenerate simhashes, e.g. boilerplate) are capped with an
+    observe-metric drop (cap_hot_buckets; audit via drop_report).
 
-    EAGER BUILD: with ``max_bucket`` set, constructing this frame runs
-    the counting job and snapshots the hot-key set as of build time
-    (see lsh_pairs); ``max_bucket=None`` keeps the plan fully lazy.
+    EAGER BUILD with ``max_bucket`` set (see ``_banded_self_join``);
+    ``max_bucket=None`` keeps the plan fully lazy.
     """
-    chunks = sim_df.select(
-        id_col,
-        "simhash",
-        hamming_band_cols("simhash", max_hamming).alias("chunk", "ckey"),
+    return _hamming_pairs(
+        sim_df, id_col, "simhash", max_hamming, max_bucket, "simhash_pairs"
     )
-    chunks = filter_null_keys(chunks, ["chunk", "ckey"])
-    chunks, persisted = _persist_if_eager(chunks, max_bucket)
-    capped = cap_hot_buckets(chunks, ["chunk", "ckey"], max_bucket, "simhash_pairs")
-    # one-sided cap; probe-side strategy by measured size (lsh_pairs)
-    a = capped.alias("a")
-    b = self_join_probe_side(chunks, drop_report(capped)).alias("b")
-    # classic banding: first-match emission replaces the candidate
-    # distinct (first_match_band_pred — each pair leaves the join
-    # exactly once); chunk-pair banding keeps the distinct. ONLY SOUND
-    # WHEN NO BUCKET WAS DROPPED: with hot buckets capped, a pair whose
-    # earliest matching band sat in a dropped bucket must still be
-    # emitted by a later intact band, which the first-match predicate
-    # would kill (see phash_neardup — found at sf1). Popcount verify
-    # runs BEFORE whichever dedup applies (guide §2.3). Identical pair
-    # set either way.
-    cand = a.join(
-        b,
-        (F.col("a.chunk") == F.col("b.chunk"))
-        & (F.col("a.ckey") == F.col("b.ckey"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    )
-    rep = drop_report(capped)
-    if rep is None or rep["n_hot_buckets"] == 0:
-        fm = first_match_band_pred("a.simhash ^ b.simhash", "a.chunk", max_hamming)
-    else:
-        # drops occurred: first-match is only sound with the hot set in
-        # the predicate (a pair whose earliest matching band was dropped
-        # must still emit from a later band); falls back to the
-        # candidate distinct when the hot set was not collected/too big
-        hot = hot_keys_by_band(rep)
-        fm = (
-            first_match_band_pred(
-                "a.simhash ^ b.simhash", "a.chunk", max_hamming,
-                hash_expr="a.simhash", hot_by_band=hot,
-            )
-            if hot is not None
-            else None
-        )
-    if fm is not None:
-        cand = cand.where(fm)
-    out = cand.select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.bit_count(F.expr("a.simhash ^ b.simhash")).alias("hamming"),
-    ).where(F.col("hamming") <= max_hamming)
-    if fm is None:
-        out = out.distinct()
-    out._eo_drop_report = drop_report(capped)
-    out._eo_persisted = persisted
-    return out
-
-
-def embedding_neardup(
-    emb_df: DataFrame,
-    threshold: float = 0.9,
-    num_planes: int = 16,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    dim: int = 64,
-    max_bucket: int | None = 4096,
-) -> DataFrame:
-    """Cosine≥τ near-dup pairs via random-hyperplane LSH.
-
-    Sign-pattern bucket join (multi-probe: 4 rotations of plane subsets)
-    → exact cosine verify on candidates. Recall is probabilistic (LSH);
-    precision is exact.
-
-    EAGER BUILD: with ``max_bucket`` set, constructing this frame runs
-    the counting job and snapshots the hot-key set as of build time
-    (see lsh_pairs); ``max_bucket=None`` keeps the plan fully lazy.
-    """
-    rng = np.random.default_rng(7)
-    planes = rng.normal(size=(num_planes, dim))
-    spark = emb_df.sparkSession
-    bc = spark.sparkContext.broadcast(planes)
-
-    sig_schema = StructType(
-        [emb_df.schema[id_col], StructField("bucket", ArrayType(LongType()))]
-    )
-
-    def buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        P = bc.value
-        nb = 4
-        per = num_planes // nb
-        for pdf in batches:
-            if len(pdf) == 0:  # vstack rejects an empty sequence
-                continue
-            V = np.vstack(pdf[emb_col].to_numpy())
-            signs = (V @ P.T) > 0  # (n, planes)
-            keys = []
-            for g in range(nb):
-                chunk = signs[:, g * per : (g + 1) * per]
-                key = chunk @ (1 << np.arange(per, dtype=np.int64))
-                keys.append(key + (g << 32))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "bucket": list(np.stack(keys, axis=1))}
-            )
-
-    sig = emb_df.select(id_col, emb_col).mapInPandas(buckets, schema=sig_schema)
-    exploded = sig.select(id_col, F.explode("bucket").alias("bkey"))
-    exploded = filter_null_keys(exploded, ["bkey"])
-    capped = cap_hot_buckets(exploded, ["bkey"], max_bucket, "embedding_neardup")
-    # one-sided cap; probe-side strategy by measured size (lsh_pairs)
-    a = capped.alias("a")
-    b = self_join_probe_side(exploded, drop_report(capped)).alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    e = emb_df.select(id_col, emb_col)
-    joined = cand.join(
-        e.withColumnRenamed(id_col, "id_a").withColumnRenamed(emb_col, "emb_a"), "id_a"
-    ).join(
-        e.withColumnRenamed(id_col, "id_b").withColumnRenamed(emb_col, "emb_b"), "id_b"
-    )
-    dot = (
-        "aggregate(zip_with(emb_a, emb_b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, z) -> acc + z)"
-    )
-    na = (
-        "sqrt(aggregate(transform(emb_a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, z) -> acc + z))"
-    )
-    nb_ = (
-        "sqrt(aggregate(transform(emb_b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, z) -> acc + z))"
-    )
-    out = (
-        joined.withColumn("cosine", F.expr(f"{dot} / ({na} * {nb_})"))
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-    out._eo_drop_report = drop_report(capped)
-    return out

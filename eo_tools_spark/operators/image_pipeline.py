@@ -15,7 +15,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -140,85 +140,23 @@ def thumbnails(images: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame
 def phash_neardup(
     images: DataFrame, max_hamming: int = 6, max_bucket: int | None = 4096
 ) -> DataFrame:
-    """Near-duplicate image pairs by perceptual-hash hamming distance —
-    pigeonhole banding on the phash column (native bit ops, no decode,
-    no UDF). For the default k=6 single chunks would be 9 bits (512
-    distinct keys → massive buckets); hamming_band_cols switches to
-    chunk-PAIR banding (16-bit keys), shrinking candidate volume
-    quadratically. Hot buckets capped with an eagerly-measured drop
-    (audit via dedup.drop_report on the returned frame).
+    """Near-duplicate image pairs ``(id_a, id_b, hamming)`` by
+    perceptual-hash hamming distance — pigeonhole banding on the phash
+    column (native bit ops, no decode, no UDF). For the default k=6
+    single chunks would be 9 bits (512 distinct keys → massive
+    buckets); hamming_band_cols switches to chunk-PAIR banding (16-bit
+    keys), shrinking candidate volume quadratically. Hot buckets capped
+    with an eagerly-measured drop (audit via dedup.drop_report on the
+    returned frame). Same body as dedup.simhash_pairs
+    (``dedup._hamming_pairs``).
 
-    EAGER BUILD: with ``max_bucket`` set, constructing this frame runs
-    the counting job and snapshots the hot-key set as of build time
-    (see dedup.lsh_pairs); ``max_bucket=None`` keeps the plan lazy."""
-    from eo_tools_spark.operators.dedup import (
-        _persist_if_eager,
-        cap_hot_buckets,
-        drop_report,
-        filter_null_keys,
-        first_match_band_pred,
-        hamming_band_cols,
-        hot_keys_by_band,
-        self_join_probe_side,
-    )
+    EAGER BUILD with ``max_bucket`` set (see dedup._banded_self_join);
+    ``max_bucket=None`` keeps the plan lazy."""
+    from eo_tools_spark.operators.dedup import _hamming_pairs
 
-    chunks = images.select(
-        "image_id",
-        "phash",
-        hamming_band_cols("phash", max_hamming).alias("chunk", "ckey"),
+    return _hamming_pairs(
+        images, "image_id", "phash", max_hamming, max_bucket, "phash_neardup"
     )
-    chunks = filter_null_keys(chunks, ["chunk", "ckey"])
-    chunks, persisted = _persist_if_eager(chunks, max_bucket)
-    capped = cap_hot_buckets(chunks, ["chunk", "ckey"], max_bucket, "phash_neardup")
-    # one-sided cap; probe-side strategy by measured size (never Spark's
-    # exploded-frame estimate — see dedup.self_join_probe_side)
-    a = capped.alias("a")
-    b = self_join_probe_side(chunks, drop_report(capped)).alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.chunk") == F.col("b.chunk"))
-        & (F.col("a.ckey") == F.col("b.ckey"))
-        & (F.col("a.image_id") < F.col("b.image_id")),
-    )
-    # classic banding: first-match emission replaces the candidate
-    # distinct — each pair leaves the join exactly once, so no dedup
-    # exchange at all (dedup.first_match_band_pred). Chunk-pair banding
-    # (None) keeps the distinct. Under hot-bucket DROPS the plain
-    # predicate is unsound — a pair whose earliest matching band sat in
-    # a dropped bucket must still be emitted by a later intact band
-    # (found at sf1: 184.5M -> 140.8M pairs) — so when the anti-join's
-    # broadcast path has already COLLECTED the hot set, the predicate
-    # gains per-band "OR key ∈ hot" membership (an InSet probe) and
-    # stays exactly equal to the distinct's pair set; an uncollected or
-    # oversized hot set falls back to the candidate distinct. Popcount
-    # verify runs BEFORE whichever dedup applies (guide §2.3);
-    # identical pair set either way — hamming is a pure function of
-    # the pair.
-    rep = drop_report(capped)
-    if rep is None or rep["n_hot_buckets"] == 0:
-        fm = first_match_band_pred("a.phash ^ b.phash", "a.chunk", max_hamming)
-    else:
-        hot = hot_keys_by_band(rep)
-        fm = (
-            first_match_band_pred(
-                "a.phash ^ b.phash", "a.chunk", max_hamming,
-                hash_expr="a.phash", hot_by_band=hot,
-            )
-            if hot is not None
-            else None
-        )
-    if fm is not None:
-        cand = cand.where(fm)
-    out = cand.select(
-        F.col("a.image_id").alias("id_a"),
-        F.col("b.image_id").alias("id_b"),
-        F.bit_count(F.expr("a.phash ^ b.phash")).alias("hamming"),
-    ).where(F.col("hamming") <= max_hamming)
-    if fm is None:
-        out = out.distinct()
-    out._eo_drop_report = drop_report(capped)
-    out._eo_persisted = persisted
-    return out
 
 
 # ------------------------------------------------- multimodal decode

@@ -357,8 +357,8 @@ def ann_topk(k: int = 10, n_queries: int = 5) -> tuple[str, str]:
 
 
 def neardup_embedding(threshold: float = 0.4) -> tuple[str, str]:
-    """All-pairs cosine ≥ τ (exact; the LSH-bucketed scale path is
-    operators/dedup.embedding_neardup, pytest-pinned)."""
+    """All-pairs cosine ≥ τ (exact, pure SQL; no LSH-bucketed operator
+    backs it)."""
 
     def build(d: str) -> str:
         cos = _cosine(d, "a.embedding", "b.embedding")

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from eo_tools_spark.operators.dedup import (
-    embedding_neardup,
     exact_dedup,
     lsh_pairs,
     minhash_signatures,
@@ -200,23 +199,6 @@ def embeddings_df(spark, n=400, dim=32, seed=9):
         {"vec_id": np.arange(n), "embedding": [v.astype(np.float32).tolist() for v in V]}
     )
     return spark.createDataFrame(pdf), V
-
-
-class TestEmbeddingNearDup:
-    def test_planted_pairs_found(self, spark):
-        df, V = embeddings_df(spark)
-        out = embedding_neardup(df, threshold=0.95, dim=32).toPandas()
-        got = {(r.id_a, r.id_b) for r in out.itertuples()}
-        Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-        planted = {
-            (i, 100 + i)
-            for i in range(10)
-            if Vn[i] @ Vn[100 + i] >= 0.95
-        }
-        assert planted and planted <= got
-        # precision exact
-        for r in out.itertuples():
-            assert Vn[r.id_a] @ Vn[r.id_b] == pytest.approx(r.cosine, abs=1e-6)
 
 
 class TestTopK:
@@ -713,7 +695,7 @@ def test_cap_null_keys_filtered_and_metric_truthful(spark):
     df = spark.createDataFrame(rows, "doc_id long, band int, key long")
     out = cap_hot_buckets(df, ["band", "key"], 10, "nulltest")
     assert out.count() == 0  # hot bucket dropped, NULL rows filtered
-    rep = drop_report("nulltest")
+    rep = drop_report(out)
     assert rep["rows_dropped"] == 50 and rep["n_hot_buckets"] == 1
     # with a generous cap, non-null rows survive; NULLs stay filtered
     out2 = cap_hot_buckets(df, ["band", "key"], 100, "nulltest2")
@@ -1174,8 +1156,9 @@ class TestProductQuantization:
         assert (0, 1) in got, got
         assert out[(out.id_a == 0) & (out.id_b == 1)].hamming.iloc[0] == 1
 
+    @pytest.mark.parametrize("entry", ["simhash_pairs", "phash_neardup"])
     def test_hot_aware_first_match_equals_distinct_under_drops(
-        self, spark, monkeypatch
+        self, spark, monkeypatch, entry
     ):
         """Under hot-bucket drops the collected hot set lets first-match
         emission replace the candidate distinct (per-band
@@ -1183,8 +1166,15 @@ class TestProductQuantization:
         must equal the distinct fallback EXACTLY, with no duplicate
         emissions; an uncollectable hot set must fall back to the
         distinct. Random multi-band-collision corpus plus a planted
-        hot chunk so several pairs match in >1 band."""
+        hot chunk so several pairs match in >1 band. Run through both
+        entry points of the shared hamming path."""
         import eo_tools_spark.operators.dedup as D
+        from eo_tools_spark.operators.image_pipeline import phash_neardup
+
+        cols, pairs = {
+            "simhash_pairs": (["doc_id", "simhash"], D.simhash_pairs),
+            "phash_neardup": (["image_id", "phash"], phash_neardup),
+        }[entry]
 
         rng = np.random.default_rng(11)
         rows = []
@@ -1194,10 +1184,8 @@ class TestProductQuantization:
             c2 = int(rng.integers(0, 8))
             c3 = int(rng.integers(0, 4))
             rows.append((i, (c3 << 48) | (c2 << 32) | (c1 << 16) | c0))
-        df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["doc_id", "simhash"])
-        )
-        hot = D.simhash_pairs(df, max_hamming=3, max_bucket=50)
+        df = spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+        hot = pairs(df, max_hamming=3, max_bucket=50)
         rep = D.drop_report(hot)
         assert rep["n_hot_buckets"] >= 1  # the cap really dropped
         hot_pdf = hot.toPandas()
@@ -1205,9 +1193,13 @@ class TestProductQuantization:
         assert not hot_pdf.duplicated(["id_a", "id_b"]).any()
         # force the distinct fallback and compare exactly
         monkeypatch.setattr(D, "hot_keys_by_band", lambda *_a, **_k: None)
-        dist_pdf = D.simhash_pairs(
-            df, max_hamming=3, max_bucket=50
-        ).toPandas()
+        dist = pairs(df, max_hamming=3, max_bucket=50)
+        dist_pdf = dist.toPandas()
+
+        def dedups(frame):  # the candidate distinct plans as an Aggregate
+            return "Aggregate" in frame._jdf.queryExecution().optimizedPlan().toString()
+
+        assert not dedups(hot) and dedups(dist)
         key = lambda p: set(map(tuple, p[["id_a", "id_b", "hamming"]].values))  # noqa: E731
         assert key(hot_pdf) == key(dist_pdf)
         # oversized hot set → helper refuses (callers keep the distinct)
