@@ -585,7 +585,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reduce a dedup pipeline actually needs: LSH near-dup PAIRS →
     connected components → (doc_id, cluster_id = min id of the
     component). Spark side: the dual-dialect minhash pair SQL feeds the
-    iterative min-label-propagation operator (operators/cluster.py);
+    star-contraction operator (operators/cluster.py);
     the DuckDB oracle computes the same components with a recursive-CTE
     transitive closure over the IDENTICAL pair set."""
     from eo_tools_spark.operators import text_queries as TQ

@@ -512,7 +512,7 @@ def run_queries() -> dict:
         cc_full: dict = {}
 
         def q13_full():
-            comp = connected_components(pairs13, algorithm="star")
+            comp = connected_components(pairs13)
             if not cc_full:  # populate once — see the sf0.1 q13 note
                 cc_full.update(
                     distributed_rounds=comp._eo_cc_rounds,
@@ -724,11 +724,11 @@ def run_queries() -> dict:
     def q13():
         # star contraction: the clustered phash graph chains (image i
         # near-dups i±1 ...), so component diameter grows with cluster
-        # size — label propagation needs diameter rounds and times out,
-        # star closes in O(log n) alternations; once the contracted
-        # edge set fits the measured driver budget the remaining rounds
-        # finish locally (connected_components local_finish_bytes)
-        comp = connected_components(q13_pairs, algorithm="star")
+        # size — star closes in O(log n) alternations regardless; once
+        # the contracted edge set fits the measured driver budget the
+        # remaining rounds finish locally (connected_components
+        # local_finish_bytes)
+        comp = connected_components(q13_pairs)
         if not cc_report:
             # populate ONCE (first repeat): the query is deterministic
             # across repeats, and writing on every repeat would make the
