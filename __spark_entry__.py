@@ -275,7 +275,7 @@ def q_stream_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition lineage (availableNow trigger) — and the snapshot
     read-back must equal the batch PIP oracle exactly. A second run of
     the stream against the same checkpoint is asserted inline to add
-    nothing (replay-safe commits, snapshots.py:276)."""
+    nothing (replay-safe commits, SnapshotTable.append_batch)."""
     import tempfile
 
     from pyspark.sql import functions as F

@@ -9,15 +9,18 @@ ICEBERG_MAPPING below for the exact method → Iceberg-operation table
 (pinned by tests/test_snapshots.py::TestIcebergSeam). The swap point is
 this one class: callers never touch the storage layout.
 
-Commit protocol (mirrors Iceberg's snapshot semantics):
-- data for a batch lands under ``data/batch=<id>/`` (invisible until
-  committed);
-- lineage/metric rows land under ``_lineage/batch=<id>/``;
-- the commit point is an atomic rename of ``_snapshots/.tmp-<id>`` →
-  ``_snapshots/<id>.json`` (one file per snapshot, like Iceberg's
-  metadata.json chain). Readers only see committed batches.
+Commit protocol (mirrors Iceberg's snapshot semantics). A table is two
+directories, ``data/`` and ``_snapshots/``:
+- a batch's data lands under ``data/batch=<id>-<token>/``, the token
+  unique per writer (invisible until committed);
+- the commit point is an exclusive hard link of the batch's summary
+  json to the next free ``_snapshots/v<seq>.json`` (Iceberg's
+  metadata.json version chain). Readers only see committed batches.
+- the summary carries the batch's lineage: rows per Spark partition,
+  wall time and throughput, as Iceberg keeps per-partition counts in
+  snapshot metadata rather than in a second table.
 - appends are idempotent per batch id → resume = anti-join of the work
-  list against committed lineage (exactly the reference's
+  list against committed batch ids (exactly the reference's
   skip-if-exists idempotency: eo_tools/S1/process.py:165, S2.py:112-114,
   DEM cache core.py:319-335 — lifted from files to snapshots).
 """
@@ -26,10 +29,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -71,8 +76,9 @@ ICEBERG_MAPPING: dict[str, tuple[str, str]] = {
         "uncommitted/in-flight data never visible",
     ),
     "lineage": (
-        "spark.read.table(table + '.partitions')  # + custom metrics table",
-        "per-partition rows + wall-clock metrics for committed batches",
+        "spark.read.table(table + '.partitions')  # metadata table",
+        "per-partition rows + wall-clock metrics for committed batches, "
+        "read from snapshot metadata with no data scan",
     ),
     "snapshot_summaries": (
         "SELECT summary FROM table.snapshots",
@@ -113,9 +119,9 @@ class SnapshotTable:
     def _parse_seq(cls, fname: str) -> int | None:
         """Version number for an exactly-versioned snapshot filename
         (``v<_SEQ_DIGITS digits>.json``), else None. THE single parse —
-        _snapshot_files and _next_seq must never disagree on what
-        counts as a version, or a legacy lookalike could inflate the
-        sequence into names this parse then rejects."""
+        _summaries and _next_seq must never disagree on what counts as
+        a version, or a lookalike name could inflate the sequence into
+        names this parse then rejects."""
         if not fname.endswith(".json") or fname.startswith(".tmp"):
             return None
         name = fname[: -len(".json")]
@@ -124,62 +130,57 @@ class SnapshotTable:
             return int(name[1:])
         return None
 
-    def _load_cached(self, fname: str) -> dict:
-        got = self._summary_memo.get(fname)
-        if got is None:
-            got = self._load(f"{self.path}/_snapshots/{fname}")
-            self._summary_memo[fname] = got
-        return got
-
-    def _snapshot_files(self) -> list[tuple[str, str]]:
-        """ORDERED (batch_id, json_path) for every committed snapshot,
-        in COMMIT order. The order key is the version number that IS
-        the filename (``v<seq>.json``; the batch id lives inside the
-        json) — DURABLE table metadata that survives copy/backup/
-        restore, unlike file timestamps (any cp/rsync/tar rewrites
-        ctime in arbitrary order). The bare-version filename also makes
-        the commit link's exclusivity a claim on the VERSION NUMBER
-        itself: two writers — any batch ids — cannot both hold seq N.
-        Snapshots from the pre-versioned layout (``<batch_id>.json``)
-        predate every versioned commit, so they sort first, among
-        themselves by name (their original lexicographic order).
+    def _summary(self, fname: str) -> dict:
+        """Parsed summary of the committed snapshot ``fname``, memoized.
 
         FAIL-SAFE: an unreadable committed snapshot RAISES instead of
         being skipped — pretending a commit doesn't exist would let
         vacuum delete its data and let a resume re-commit its batch id
         (duplicate rows). Snapshot files are never deleted, so there is
         no benign race that makes one unreadable."""
-        snapdir = f"{self.path}/_snapshots"
-        entries = []
-        for f in os.listdir(snapdir):
-            seq = self._parse_seq(f)
-            if seq is not None:
-                try:
-                    bid = self._load_cached(f)["batch_id"]
-                except (OSError, ValueError, KeyError) as e:
-                    raise RuntimeError(
-                        f"unreadable committed snapshot {snapdir}/{f} — "
-                        "refusing to treat the chain as shorter than it "
-                        f"is ({e!r})"
-                    ) from e
-                entries.append(((1, seq, ""), bid, f))
-            elif f.endswith(".json") and not f.startswith(".tmp"):
-                # legacy tokenless/unversioned layout
-                name = f[: -len(".json")]
-                entries.append(((0, 0, name), name, f))
-        entries.sort(key=lambda e: e[0])
-        return [(bid, f"{snapdir}/{f}") for _, bid, f in entries]
+        got = self._summary_memo.get(fname)
+        if got is None:
+            path = f"{self.path}/_snapshots/{fname}"
+            try:
+                with open(path) as f:
+                    got = json.load(f)
+                if "batch_id" not in got:
+                    raise ValueError("summary has no batch_id")
+            except (OSError, ValueError) as e:
+                raise RuntimeError(
+                    f"unreadable committed snapshot {path} — refusing to "
+                    f"treat the chain as shorter than it is ({e!r})"
+                ) from e
+            self._summary_memo[fname] = got
+        return got
+
+    def _summaries(self) -> list[dict]:
+        """Summary of every committed snapshot, in COMMIT order. The
+        order key is the version number that IS the filename
+        (``v<seq>.json``; the batch id lives inside the json) — DURABLE
+        table metadata that survives copy/backup/restore, unlike file
+        timestamps (any cp/rsync/tar rewrites ctime in arbitrary
+        order). The bare-version filename also makes the commit link's
+        exclusivity a claim on the VERSION NUMBER itself: two writers —
+        any batch ids — cannot both hold seq N. The returned dicts are
+        the memoized ones: callers must not mutate them."""
+        versions = sorted(
+            (seq, f)
+            for f in os.listdir(f"{self.path}/_snapshots")
+            if (seq := self._parse_seq(f)) is not None
+        )
+        return [self._summary(f) for _, f in versions]
 
     def committed_batches(self) -> list[str]:
         """Committed batch ids in COMMIT order (Iceberg: snapshots
         ORDER BY committed_at) — concurrent writers of distinct ids can
         commit out of lexicographic order, and time travel must replay
         the commit sequence, not the id alphabet."""
-        return [bid for bid, _ in self._snapshot_files()]
+        return [s["batch_id"] for s in self._summaries()]
 
     def _next_seq(self) -> int:
         """Next free version number, derived from the RAW directory
-        listing (the same exact parse as _snapshot_files) — never from
+        listing (the same exact parse as _summaries) — never from
         loaded/filtered entries, so an occupied version can never be
         re-proposed and the commit retry always makes progress."""
         seqs = [
@@ -210,8 +211,7 @@ class SnapshotTable:
             json.dump(summary, f)
         try:
             while True:
-                files = self._snapshot_files()
-                if any(bid == batch_id for bid, _ in files):
+                if batch_id in self.committed_batches():
                     raise CommitConflictError(
                         f"snapshot {batch_id!r} was committed by another writer"
                     )
@@ -232,12 +232,14 @@ class SnapshotTable:
         df: DataFrame,
         batch_id: str,
         partition_by: list[str] | None = None,
-    ) -> tuple[str, list, int]:
-        """Write the batch's data + lineage files under a UNIQUE token
-        (never visible to readers — read() resolves directories through
-        committed snapshot summaries only). Mirrors Iceberg writing
-        immutable data files before the metadata swap; a crashed or
-        losing writer leaves only orphan files (vacuum_orphans).
+    ) -> tuple[str, list[list[int]], int]:
+        """Write the batch's data under a UNIQUE token (never visible to
+        readers — read() resolves directories through committed
+        snapshot summaries only); return ``(token, [[pid, rows], ...],
+        wall_ms)`` for the summary. The write is the only Spark job
+        (_partition_rows). Mirrors Iceberg writing immutable data files
+        before the metadata swap; a crashed or losing writer leaves
+        only orphan files (vacuum_orphans).
 
         ``partition_by`` lays the batch out in Hive-style value
         directories (Iceberg: an identity partition spec on those
@@ -246,32 +248,12 @@ class SnapshotTable:
         token = uuid.uuid4().hex[:12]
         t0 = time.time()
         data_dir = f"{self.path}/data/batch={batch_id}-{token}"
-        staged = df.withColumn("_pid", F.spark_partition_id())
-        writer = staged.write.mode("overwrite")
+        writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
-        # lineage metrics from the written files; n_rows is the sum of
-        # the per-partition counts (no second full scan of the batch)
-        written = self.spark.read.parquet(data_dir)
-        metrics_rows = (
-            written.groupBy("_pid").agg(F.count(F.lit(1)).alias("rows")).collect()
-        )
-        wall_ms = int((time.time() - t0) * 1000)
-        metrics = self.spark.createDataFrame(
-            [(int(r._pid), int(r.rows), batch_id, wall_ms) for r in metrics_rows],
-            "_pid int, rows long, batch_id string, wall_ms long",
-        )
-        metrics.write.mode("overwrite").parquet(
-            f"{self.path}/_lineage/batch={batch_id}-{token}"
-        )
-        return token, metrics_rows, wall_ms
-
-    def _discard_staged(self, batch_id: str, token: str) -> None:
-        shutil.rmtree(f"{self.path}/data/batch={batch_id}-{token}", ignore_errors=True)
-        shutil.rmtree(
-            f"{self.path}/_lineage/batch={batch_id}-{token}", ignore_errors=True
-        )
+        partitions = _partition_rows(data_dir)
+        return token, partitions, int((time.time() - t0) * 1000)
 
     def append_batch(
         self,
@@ -289,11 +271,8 @@ class SnapshotTable:
         discards its staged files and returns
         ``{"skipped": True, "conflict": True}`` (the Iceberg retry
         outcome). Writers of distinct batch_ids never conflict."""
-        # ids become file/dir name components and must never collide
-        # with the reserved versioned-snapshot namespace (a legacy file
-        # named exactly v<12 digits> would misparse as a version)
-        import re
-
+        # ids become file/dir name components and must never look like
+        # a snapshot version name (v<12 digits>)
         if (
             not batch_id
             or batch_id.startswith(".")
@@ -305,19 +284,17 @@ class SnapshotTable:
         # data/batch=<id>-<token>/, so read()'s basePath-anchored
         # partition discovery infers a synthetic `batch` column and
         # drops it — a DATA column of that name would collide (Spark
-        # duplicate-column error at read, or a silent drop). Same for
-        # the `_pid` lineage column. Refuse loudly at write time.
-        reserved = {"batch", "_pid"} & set(df.columns)
-        if reserved:
+        # duplicate-column error at read, or a silent drop). Refuse
+        # loudly at write time.
+        if "batch" in df.columns:
             raise ValueError(
-                f"column name(s) {sorted(reserved)} are reserved by the "
-                "snapshot layout (data/batch=<id>/ partition dirs, _pid "
-                "lineage) — rename before append_batch"
+                "column name 'batch' is reserved by the snapshot layout "
+                "(data/batch=<id>-<token>/ dirs) — rename before append_batch"
             )
         if batch_id in self.committed_batches():
             return {"batch_id": batch_id, "skipped": True}
-        token, metrics_rows, wall_ms = self._stage(df, batch_id, partition_by)
-        n_rows = sum(int(r.rows) for r in metrics_rows)
+        token, partitions, wall_ms = self._stage(df, batch_id, partition_by)
+        n_rows = sum(rows for _, rows in partitions)
         try:
             self._try_commit(
                 batch_id,
@@ -330,16 +307,19 @@ class SnapshotTable:
                     "committed_at": time.strftime(
                         "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                     ),
+                    "partitions": partitions,
                 },
             )
         except CommitConflictError:
-            self._discard_staged(batch_id, token)
+            shutil.rmtree(
+                f"{self.path}/data/batch={batch_id}-{token}", ignore_errors=True
+            )
             return {"batch_id": batch_id, "skipped": True, "conflict": True}
         return {"batch_id": batch_id, "rows": n_rows, "wall_ms": wall_ms}
 
     def vacuum_orphans(self, older_than_s: float = 86400.0) -> list[str]:
-        """Delete staged data/lineage directories (and stale commit tmp
-        files) no committed snapshot references — crashed or
+        """Delete staged data directories (and stale commit tmp files)
+        no committed snapshot references — crashed or
         conflict-losing writers leave them (Iceberg:
         remove_orphan_files). Returns the removed names.
 
@@ -358,33 +338,27 @@ class SnapshotTable:
         0 only when no writer can be active."""
 
         def refresh_live() -> set[str]:
-            return {
-                self._dir_name(self._load_cached(os.path.basename(p)))
-                for _, p in self._snapshot_files()
-            }
+            return {f"batch={s['batch_id']}-{s['token']}" for s in self._summaries()}
 
         live = refresh_live()
         cutoff = time.time() - older_than_s
         removed = []
-        for sub in ("data", "_lineage"):
-            root = f"{self.path}/{sub}"
-            if not os.path.isdir(root):
-                continue
-            for d in sorted(os.listdir(root)):
-                full = f"{root}/{d}"
-                if d.startswith("batch=") and d not in live:
-                    try:
-                        old = os.path.getmtime(full) <= cutoff
-                    except OSError:
-                        continue  # raced a loser's own _discard_staged
-                    if not old:
-                        continue
-                    # narrow the commit-mid-vacuum window
-                    live = refresh_live()
-                    if d in live:
-                        continue
-                    shutil.rmtree(full, ignore_errors=True)
-                    removed.append(f"{sub}/{d}")
+        root = f"{self.path}/data"
+        for d in sorted(os.listdir(root)) if os.path.isdir(root) else []:
+            full = f"{root}/{d}"
+            if d.startswith("batch=") and d not in live:
+                try:
+                    old = os.path.getmtime(full) <= cutoff
+                except OSError:
+                    continue  # raced a conflict loser's own rmtree
+                if not old:
+                    continue
+                # narrow the commit-mid-vacuum window
+                live = refresh_live()
+                if d in live:
+                    continue
+                shutil.rmtree(full, ignore_errors=True)
+                removed.append(f"data/{d}")
         # a committer killed between json.dump and the finally-unlink
         # leaks its .tmp file; nothing else ever removes it
         snapdir = f"{self.path}/_snapshots"
@@ -399,16 +373,6 @@ class SnapshotTable:
                     pass  # raced the committer's own finally-unlink
         return removed
 
-    @staticmethod
-    def _dir_name(summary: dict) -> str:
-        """Data/lineage dir name for a committed summary. Summaries
-        written before the optimistic-concurrency layout carry no
-        ``token`` and live at the legacy ``batch=<id>`` path — still
-        readable, never vacuumed as orphans."""
-        tok = summary.get("token")
-        bid = summary["batch_id"]
-        return f"batch={bid}-{tok}" if tok else f"batch={bid}"
-
     # ------------------------------------------------------------ reads
 
     def current_snapshot_id(self) -> str | None:
@@ -421,54 +385,50 @@ class SnapshotTable:
         at or before that snapshot (Iceberg time travel,
         ``option('snapshot-id', ...)``). Uncommitted batch dirs are
         invisible either way."""
-        # ONE directory listing: the ordered file list yields both the
-        # commit order and the summary paths; only the kept summaries
-        # are opened. Directories resolve THROUGH the committed
+        # ONE directory listing yields the commit order and the
+        # summaries. Directories resolve THROUGH the committed
         # summaries (the snapshot's token names the data dir) — staged/
         # orphan dirs are structurally invisible, not merely
         # convention-invisible.
-        files = self._snapshot_files()
-        batches = [bid for bid, _ in files]
+        summaries = self._summaries()
+        batches = [s["batch_id"] for s in summaries]
         if as_of_snapshot is not None:
             if as_of_snapshot not in batches:
                 raise ValueError(f"unknown snapshot {as_of_snapshot!r}")
-            files = files[: batches.index(as_of_snapshot) + 1]
-        if not files:
+            summaries = summaries[: batches.index(as_of_snapshot) + 1]
+        if not summaries:
             raise ValueError("no committed snapshots")
         paths = [
-            f"{self.path}/data/{self._dir_name(self._load_cached(os.path.basename(p)))}"
-            for _, p in files
+            f"{self.path}/data/batch={s['batch_id']}-{s['token']}" for s in summaries
         ]
         # basePath anchors partition discovery at data/: without it,
         # TWO committed batches that are themselves Hive-partitioned
         # (e.g. the IVF index's cell=N dirs after an incremental
         # append) make Spark infer conflicting directory structures.
         # The synthetic `batch` partition column this introduces is an
-        # internal detail — dropped like _pid.
+        # internal detail of the layout — dropped here.
         return (
             self.spark.read.option("basePath", f"{self.path}/data")
             .parquet(*paths)
-            .drop("_pid", "batch")
+            .drop("batch")
         )
 
     def lineage(self) -> DataFrame:
-        paths = [
-            f"{self.path}/_lineage/{self._dir_name(self._load_cached(os.path.basename(p)))}"
-            for _, p in self._snapshot_files()
-        ]
-        return self.spark.read.parquet(*paths)
-
-    @staticmethod
-    def _load(path: str) -> dict:
-        with open(path) as f:
-            return json.load(f)
+        """One row per (committed batch, Spark partition that wrote
+        rows), built from the snapshot summaries; ``wall_ms`` is the
+        batch's, repeated on each of its partitions."""
+        return self.spark.createDataFrame(
+            [
+                (pid, rows, s["batch_id"], s["wall_ms"])
+                for s in self._summaries()
+                for pid, rows in s["partitions"]
+            ],
+            "_pid int, rows long, batch_id string, wall_ms long",
+        )
 
     def snapshot_summaries(self) -> list[dict]:
         # copies: the memoized dicts must not be mutated by callers
-        return [
-            dict(self._load_cached(os.path.basename(p)))
-            for _, p in self._snapshot_files()
-        ]
+        return [dict(s) for s in self._summaries()]
 
     # ----------------------------------------------------------- resume
 
@@ -496,3 +456,29 @@ def run_checkpointed(
             raise RuntimeError(f"simulated crash before batch {batch_id}")
         results.append(table.append_batch(df, batch_id))
     return results
+
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet")
+
+
+def _partition_rows(data_dir: str) -> list[list[int]]:
+    """``[[pid, rows], ...]`` of the parquet files under ``data_dir``,
+    by ascending pid, without partitions that wrote no rows (as
+    ``groupBy(spark_partition_id()).count()`` has them). Spark names
+    each data file ``part-<task partition id>-<job uuid>...``
+    (FileCommitProtocol.getFilename), so the name says which partition
+    wrote the file and its footer how many rows: no re-read of the data
+    and no Spark job. A task's files in several ``partition_by`` value
+    dirs sum into its row. The table is local-filesystem-only (os.link
+    commit), so the driver reads the footers directly."""
+    rows: dict[int, int] = {}
+    for root, _, files in os.walk(data_dir):
+        for f in files:
+            if f.startswith((".", "_")):
+                continue  # checksums, _SUCCESS
+            m = _PART_FILE.fullmatch(f)
+            if m is None:
+                raise RuntimeError(f"data file {root}/{f} names no task partition")
+            pid = int(m.group(1))
+            rows[pid] = rows.get(pid, 0) + pq.read_metadata(f"{root}/{f}").num_rows
+    return [[pid, n] for pid, n in sorted(rows.items()) if n]

@@ -8,8 +8,8 @@
 On a real cluster add --master/--deploy-mode/--num-executors; the job
 body is identical (nothing below assumes local mode). The run is
 RESUMABLE: work is batched by AOI, each batch commits one snapshot;
-re-submitting after a failure skips committed batches via the lineage
-anti-join.
+re-submitting after a failure skips committed batches (append_batch is
+idempotent per batch id).
 """
 
 from __future__ import annotations
@@ -60,9 +60,6 @@ def main() -> None:
     # already-committed AOIs are skipped on resubmit (resume path)
     for aoi_id, ring in aois.items():
         batch_id = f"aoi={aoi_id}"
-        if batch_id in table.committed_batches():
-            print(f"skip committed {batch_id}")
-            continue
         pcells = aoi_partition_cells({aoi_id: ring}, PARTITION_RES)
         pruned = images.where(F.col("pcell").isin(pcells)) if "pcell" in images.columns else images
         aoi_cover = (
@@ -75,7 +72,7 @@ def main() -> None:
         res = table.append_batch(
             out.select("image_id", "aoi_id", "dem_tile_id", "lon", "lat"), batch_id
         )
-        print(res)
+        print(f"skip committed {batch_id}" if res.get("skipped") else res)
 
     for s in table.snapshot_summaries():
         print(s)

@@ -5,6 +5,7 @@ Mirrors the reference's idempotent skip-if-exists resume
 snapshot granularity, plus the partial-pair resume contract
 (process.py:2712-2749: checkpoint state must match on resume)."""
 
+import glob
 import os
 
 import pytest
@@ -72,6 +73,54 @@ def test_lineage_metrics(spark, tmp_path):
     assert (lin.wall_ms >= 0).all()
     summaries = t.snapshot_summaries()
     assert all("throughput_rows_per_s" in s for s in summaries)
+    assert t.lineage().schema.simpleString() == (
+        "struct<_pid:int,rows:bigint,batch_id:string,wall_ms:bigint>"
+    )
+    # the layout is the data files and the snapshot chain, nothing else
+    assert sorted(os.listdir(t.path)) == ["_snapshots", "data"]
+
+    # one lineage row per Spark partition, with that partition's rows —
+    # also when each task writes into several partition_by value dirs
+    df = spark.range(0, 700).withColumn("cell", F.col("id") % 5).repartition(7)
+    expected = sorted(
+        (r.p, r["count"])
+        for r in df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    )
+    assert len(expected) == 7
+    for name, partition_by in (("flat", None), ("cells", ["cell"])):
+        tp = SnapshotTable(spark, str(tmp_path / name))
+        tp.append_batch(df, "b000", partition_by=partition_by)
+        assert sorted((r._pid, r.rows) for r in tp.lineage().collect()) == expected
+    files = glob.glob(f"{tp.path}/data/*/cell=*/part-*.parquet")
+    assert len(files) > 7  # tasks did write into several value dirs
+
+
+def test_one_spark_job_per_commit(spark, tmp_path):
+    """The data write is a commit's only Spark job: lineage comes from
+    the written files, not from a re-read or a second table."""
+    sc = spark.sparkContext
+    t = SnapshotTable(spark, str(tmp_path / "jobs"))
+    sc.setJobGroup("snapshot-one-job", "append_batch job count")
+    try:
+        t.append_batch(spark.range(0, 100), "b000")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("snapshot-one-job")) == 1
+
+
+@pytest.mark.parametrize("partition_by", [None, ["cell"]])
+def test_empty_batch_commits_zero_rows(spark, tmp_path, partition_by):
+    """An empty batch (an AOI no image falls in) commits rows == 0 and
+    no lineage rows, and the table stays readable."""
+    t = SnapshotTable(spark, str(tmp_path / "emptyb"))
+    df = spark.range(0, 100).withColumn("cell", F.col("id") % 5)
+    t.append_batch(df, "b000", partition_by=partition_by)
+    res = t.append_batch(df.where(F.col("id") < 0), "empty", partition_by=partition_by)
+    assert res["rows"] == 0
+    assert t.committed_batches() == ["b000", "empty"]
+    assert t.lineage().where(F.col("batch_id") == "empty").count() == 0
+    assert t.read().count() == 100
+    assert t.read(as_of_snapshot="empty").count() == 100
 
 
 def test_uncommitted_invisible(spark, tmp_path):
@@ -80,7 +129,7 @@ def test_uncommitted_invisible(spark, tmp_path):
     t.append_batch(batches[0][1], "b000")
     # stage a batch's data without commit (crash between write and commit)
     data_dir = f"{t.path}/data/batch=zz"
-    batches[1][1].withColumn("_pid", F.spark_partition_id()).write.parquet(data_dir)
+    batches[1][1].write.parquet(data_dir)
     assert os.path.exists(data_dir)
     assert t.read().count() == 100  # staged-but-uncommitted not visible
 
@@ -261,34 +310,6 @@ class TestIcebergSeam:
         assert t.committed_batches() == ["b000"]
         assert t.read().count() == 100
 
-    def test_legacy_tokenless_layout_still_readable(self, spark, tmp_path):
-        """Tables committed by the pre-concurrency layout (no 'token' in
-        the summary, data at data/batch=<id>) must stay readable and
-        never be vacuumed as orphans (code-review r4 finding)."""
-        import json as _json
-
-        from pyspark.sql import functions as F
-
-        t = SnapshotTable(spark, str(tmp_path / "legacy"))
-        df = make_batches(spark, 1)[0][1]
-        # write the legacy layout by hand
-        df.withColumn("_pid", F.spark_partition_id()).write.parquet(
-            f"{t.path}/data/batch=b000"
-        )
-        spark.createDataFrame(
-            [(0, 100, "b000", 5)], "_pid int, rows long, batch_id string, wall_ms long"
-        ).write.parquet(f"{t.path}/_lineage/batch=b000")
-        with open(f"{t.path}/_snapshots/b000.json", "w") as f:
-            _json.dump({"batch_id": "b000", "rows": 100, "wall_ms": 5}, f)
-
-        assert t.committed_batches() == ["b000"]
-        assert t.read().count() == 100
-        assert t.lineage().count() == 1
-        assert t.vacuum_orphans(older_than_s=0) == []
-        # and a new-format append coexists with the legacy batch
-        t.append_batch(make_batches(spark, 2)[1][1], "b001")
-        assert t.read().count() == 200
-
     def test_commit_order_survives_timestamp_scramble(self, spark, tmp_path):
         """Commit order is DURABLE metadata (the version number in the
         snapshot filename), not inode timestamps — a copy/backup/restore
@@ -394,13 +415,12 @@ class TestIcebergSeam:
         """Regression (round-6 review): a DATA column named `batch`
         collides with read()'s basePath-inferred partition column from
         the data/batch=<id>/ layout (duplicate-column error or silent
-        drop) — refuse loudly at write time; `_pid` likewise."""
+        drop) — refuse loudly at write time."""
         t = SnapshotTable(spark, str(tmp_path / "rescol"))
         df = make_batches(spark, 1)[0][1]
-        for col in ("batch", "_pid"):
-            bad = df.withColumn(col, df[df.columns[0]])
-            with pytest.raises(ValueError, match="reserved"):
-                t.append_batch(bad, "b-ok")
+        bad = df.withColumn("batch", df[df.columns[0]])
+        with pytest.raises(ValueError, match="reserved"):
+            t.append_batch(bad, "b-ok")
         # the clean frame still writes
         assert not t.append_batch(df, "b-ok").get("skipped")
 
