@@ -15,11 +15,12 @@ geo        pure-numpy geometry kernels: WKB codec, point-in-polygon,
 functions  column-level function library (spatial, text, vector, imaging)
            built on pyspark.sql.functions + pandas UDFs.
 operators  relational operators: spatial join, kNN, range join, burst
-           pairing, dedup, similarity search, tile algebra, geocoding.
+           ranges, dedup, similarity search, tile algebra, geocoding.
 sources    deterministic synthetic generators + snapshot/lineage table
            layer (Iceberg-style commit/resume on local parquet).
 plans      plan inspection and tuning helpers (AQE, skew, broadcast).
-streaming  optional Structured Streaming wrappers (foreachBatch).
+streaming  optional Structured Streaming wrappers (foreachBatch
+           snapshot commits, watermarked exact dedup).
 """
 
 __version__ = "0.1.0"

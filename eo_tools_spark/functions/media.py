@@ -30,8 +30,8 @@ Layout notes that the tests pin:
   locations reconstructed from stsc (sample→chunk runs) + stco/co64
   (chunk offsets) + stsz (sizes); 'jpeg'/'mjpa' visual sample entries
   decode via the same payload dispatch as MJPG; AVC/HEVC/VP9/AV1
-  bitstreams raise NotImplementedError (mp4_meta still parses them —
-  the metadata/slicing path needs no codec).
+  bitstreams raise NotImplementedError carrying the parsed geometry
+  (the box walk needs no codec).
 - MP4 audio tracks: raw PCM16 ('sowt' little-endian / 'twos'
   big-endian) decode through the same sample-table walk (uniform
   stsz, 2-byte frames grouped per chunk); AAC/ALAC/Opus/AC-3 raise
@@ -595,16 +595,6 @@ def _parse_mp4_inner(b: bytes, handler: bytes = b"vide") -> dict:
         }
     kind = "video" if handler == b"vide" else "audio"
     raise ValueError(f"MP4 has no {kind} track")
-
-
-def mp4_meta(b: bytes) -> dict:
-    """Container metadata WITHOUT decoding — works for any recognized
-    codec including bitstream ones (avc1/hvc1/...) whose frames this
-    repo cannot decode. At scale this is the cheap path: slice the
-    sample table, never touch pixel data."""
-    m = _parse_mp4(b)
-    return {k: m[k] for k in
-            ("codec", "width", "height", "n_samples", "timescale", "duration")}
 
 
 def decode_mp4(b: bytes) -> np.ndarray:

@@ -36,25 +36,6 @@ def cell_col(lon: str, lat: str, res: int) -> Column:
     return F.expr(C.cell_id_sql(lon, lat, res)).cast("long")
 
 
-def cell_parent_col(cell: str | Column, parent_res: int) -> Column:
-    """Parent cell id as Catalyst arithmetic (for salting/rollup keys).
-
-    Pure integer bit ops — float division of 60-bit ids loses low bits
-    (double mantissa is 53 bits) and can flip ix/iy near their maxima."""
-    c = F.col(cell) if isinstance(cell, str) else cell
-    res = F.shiftright(c, 58)
-    ix = F.shiftright(c, 29) % (1 << 29)  # exact: constant shifts
-    iy = c % (1 << 29)
-    # variable shift: ix,iy < 2^29 are exact doubles and division by a
-    # power of two is exact, so floor(x / 2^s) == x >> s here
-    denom = F.pow(F.lit(2.0), (res - F.lit(parent_res)).cast("double"))
-    return (
-        F.lit(parent_res).cast("long") * F.lit(1 << 58).cast("long")
-        + F.floor(ix / denom).cast("long") * F.lit(1 << 29).cast("long")
-        + F.floor(iy / denom).cast("long")
-    )
-
-
 def tile_id_col(lon: str | Column, lat: str | Column) -> Column:
     """1°×1° DEM-style tile name, e.g. 'N31W009' — mirrors the Copernicus
     DEM tile naming the reference's DEM catalog uses

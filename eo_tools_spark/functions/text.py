@@ -4,7 +4,7 @@ Two layers:
 
 1. **Dual-dialect SQL builders** — fragments that parse in BOTH Spark SQL
    and DuckDB and produce bit-identical results (md5-derived 64-bit token
-   hashes, minhash, shingles, jaccard, stopword counts). These power the
+   hashes, shingles, jaccard, stopword counts). These power the
    oracle-checked driver queries AND run JVM-side (whole-stage codegen,
    zero Python) in the engine.
 2. **Vectorized numpy kernels** (see operators/dedup.py) for the
@@ -40,24 +40,6 @@ def tokens(expr: str, dialect: str) -> str:
     return (
         f"split({expr}, ' ')" if dialect == "spark" else f"string_split({expr}, ' ')"
     )
-
-
-def _transform(arr: str, lamb: str, dialect: str) -> str:
-    fn = "transform" if dialect == "spark" else "list_transform"
-    return f"{fn}({arr}, {lamb})"
-
-
-def _amin(arr: str, dialect: str) -> str:
-    fn = "array_min" if dialect == "spark" else "list_min"
-    return f"{fn}({arr})"
-
-
-def minhash(text_expr: str, seed: int, dialect: str) -> str:
-    """min over tokens of h_seed(token), h = md5('s{seed}_' || token)."""
-    tok = tokens(text_expr, dialect)
-    seeded = "concat('s" + str(seed) + "_', t)"
-    lam = f"t -> {md5_bigint(seeded, dialect)}"
-    return _amin(_transform(tok, lam, dialect), dialect)
 
 
 def shingles(expr: str, n: int, dialect: str) -> str:

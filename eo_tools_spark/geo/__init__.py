@@ -6,16 +6,12 @@ batches of pandas UDFs with zero per-row Python.
 
 from eo_tools_spark.geo.wkb import (  # noqa: F401
     polygon_to_wkb,
-    point_to_wkb,
     wkb_to_coords,
-    wkb_bounds,
 )
 from eo_tools_spark.geo.geom import (  # noqa: F401
     points_in_polygon,
     polygon_intersects,
     polygon_area,
-    clip_area,
-    overlap_ratio,
     bbox_intersects,
 )
 from eo_tools_spark.geo.cells import (  # noqa: F401

@@ -154,27 +154,3 @@ def clip_convex(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
                 out.append(inter(s, e))
             s = e
     return np.array(out) if out else np.empty((0, 2))
-
-
-def clip_area(a: np.ndarray, b: np.ndarray) -> float:
-    """area(a ∩ b); b must be convex (burst quads / AOI boxes are)."""
-    clipped = clip_convex(a, b)
-    if len(clipped) < 3:
-        return 0.0
-    return polygon_area(clipped)
-
-
-def overlap_ratio(a: np.ndarray, b: np.ndarray) -> float:
-    """Reference ``_has_overlap`` ratio (eo_tools/util.py:96-98):
-    area(a∩b) / min(area(a), area(b)). Caller applies the ≥ 1-0.01
-    tolerance — that constant is a preserved semantic."""
-    inter = clip_area(a, b)
-    denom = min(polygon_area(a), polygon_area(b))
-    return inter / denom if denom > 0 else 0.0
-
-
-HAS_OVERLAP_TOL = 0.01  # eo_tools/util.py:98 — "1% tolerance" constant
-
-
-def has_overlap(a: np.ndarray, b: np.ndarray) -> bool:
-    return overlap_ratio(a, b) >= 1.0 - HAS_OVERLAP_TOL

@@ -20,10 +20,6 @@ _WKB_POLYGON = 3
 _WKB_MULTIPOLYGON = 6
 
 
-def point_to_wkb(lon: float, lat: float) -> bytes:
-    return struct.pack("<BIdd", 1, _WKB_POINT, lon, lat)
-
-
 def polygon_to_wkb(coords) -> bytes:
     """coords: sequence of (lon, lat) for the exterior ring. Auto-closes."""
     pts = [(float(x), float(y)) for x, y in coords]
@@ -94,14 +90,3 @@ def wkb_to_coords(wkb: bytes) -> list[np.ndarray]:
             out.append(first)
         return out
     raise ValueError(f"unsupported WKB geometry type {gtype}")
-
-
-def wkb_bounds(wkb: bytes) -> tuple[float, float, float, float]:
-    rings = wkb_to_coords(wkb)
-    allpts = np.vstack(rings)
-    return (
-        float(allpts[:, 0].min()),
-        float(allpts[:, 1].min()),
-        float(allpts[:, 0].max()),
-        float(allpts[:, 1].max()),
-    )

@@ -246,8 +246,8 @@ def connected_components(
     local_finish_bytes: int | None = 256 << 20,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every id appearing in ``pairs`` —
-    cluster_id = the component's minimum id (the exact_dedup keep-id
-    convention). Ids must be orderable (any Spark-comparable type).
+    cluster_id = the component's minimum id. Ids must be orderable
+    (any Spark-comparable type).
 
     Star contraction (see module doc): state between rounds is the
     CANONICAL undirected edge set {(lo, hi): lo < hi}; each alternation

@@ -8,7 +8,6 @@ candidate-pair self-join, whose volume LSH keeps near-linear. Exact
 verification touches only candidate pairs.
 
 Operators:
-- exact_dedup          hash-groupBy canonicalization
 - minhash_signatures   H=64 minhash over word tokens (mapInPandas)
 - lsh_pairs            banded LSH candidate pairs + exact-jaccard verify
 - simhash_signatures   64-bit simhash (mapInPandas)
@@ -54,8 +53,8 @@ def cap_hot_buckets(
     A degenerate band key (boilerplate text, all-zero phash regions)
     makes one bucket quadratic in the candidate self-join — the classic
     100 TB scale-killer. Buckets above the cap are removed BEFORE the
-    join. Exact duplicates inside a dropped bucket should be caught by
-    ``exact_dedup`` first — the cap loses only near-dup pairs whose
+    join. Exact duplicates inside a dropped bucket should be canonicalized
+    first (one md5 groupBy) — the cap loses only near-dup pairs whose
     bucket exceeded ``max_bucket``, which at that size are almost always
     exact-dup families.
 
@@ -585,29 +584,17 @@ def _token_base_hash_md5(unique_tokens: np.ndarray) -> np.ndarray:
     return out
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: md5-groupBy; output one row per distinct content with
-    the canonical (min) id and the duplicate count."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("fp"))
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
-
-
 def band_key_cols(bands: int, sig_col: str = "sig") -> Column:
     """posexplode(band, key) over a minhash signature: key = xxhash64 of
-    the band's slice (band index mixed in). THE banding function — both
-    the batch self-join (lsh_pairs) and the streaming candidate
-    operator (streaming.pipeline.stream_neardup_candidates) call this,
-    so their bucket assignment is identical by construction."""
+    the band's slice (band index mixed in). THE banding function of the
+    ``lsh_pairs`` self-join."""
     return F.posexplode(
         F.expr(
             # the guard makes the "signature length must divide evenly
             # into bands" precondition a hard error — the truncating
             # CAST otherwise silently drops the trailing hashes and
             # mis-sizes every band. JVM-side, no extra job, and the
-            # xxhash64 input is untouched so keys (and the streaming
-            # operator's bucket assignment) stay identical.
+            # xxhash64 input is untouched so keys stay identical.
             f"transform(sequence(0, {bands} - 1), "
             f"b -> if(size({sig_col}) % {bands} = 0, "
             f"xxhash64(b, slice({sig_col}, b * CAST(size({sig_col})/{bands} AS INT) + 1, "
@@ -750,9 +737,9 @@ def lsh_pairs(
     sig length must be divisible by ``bands``. Band keys are xxhash64 of
     the band slice (engine-internal key — no cross-engine parity needed).
     Buckets over ``max_bucket`` members are dropped with an observe
-    metric (audit via drop_report, see cap_hot_buckets) — run
-    exact_dedup first to canonicalize the exact-dup families that
-    create such buckets.
+    metric (audit via drop_report, see cap_hot_buckets) — canonicalize
+    the exact-dup families that create such buckets first (one md5
+    groupBy).
 
     EAGER BUILD with ``max_bucket`` set (see ``_banded_self_join``);
     ``max_bucket=None`` keeps the plan fully lazy.
@@ -960,19 +947,6 @@ def decontaminate(
         .groupBy(id_col, bench_id_col)
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
-    )
-
-
-def decontaminate_keep(
-    corpus: DataFrame,
-    contaminated: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The clean corpus: anti-join away every contaminated doc id.
-    The id frame is tiny (true contamination) — AQE broadcasts it, so
-    the corpus never shuffles."""
-    return corpus.join(
-        contaminated.select(id_col).distinct(), id_col, "left_anti"
     )
 
 

@@ -109,34 +109,6 @@ def decode_stats(images: DataFrame) -> DataFrame:
     )
 
 
-def thumbnails(images: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
-    """Decode → bilinear resize → re-encode raw; the resize/prepare stage
-    of a training-data pipeline."""
-    from pyspark.sql.types import BinaryType
-
-    schema = StructType(
-        [
-            StructField("image_id", StringType()),
-            StructField("thumb", BinaryType()),
-            StructField("tw", IntegerType()),
-            StructField("th", IntegerType()),
-        ]
-    )
-
-    def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                img = IM.decode_image(r.bytes, r.fmt, r.w, r.h)
-                t = IM.resize_bilinear(img, out_w, out_h)
-                out.append((r.image_id, t.tobytes(), out_w, out_h))
-            yield pd.DataFrame(out, columns=["image_id", "thumb", "tw", "th"])
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        make, schema=schema
-    )
-
-
 def phash_neardup(
     images: DataFrame, max_hamming: int = 6, max_bucket: int | None = 4096
 ) -> DataFrame:

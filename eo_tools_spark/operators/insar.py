@@ -10,8 +10,7 @@ the distributed primitives:
 
 Everything stays in the tile model (TILE_SCHEMA rows) end to end — no
 driver-side arrays. The caller brings the coregistration LUT (from
-geocode_dem_tiles + coregister, or any (az, rg) source) tiled on the
-PRIMARY grid.
+coreg.coreg_project, or any (az, rg) source) tiled on the PRIMARY grid.
 """
 
 from __future__ import annotations
@@ -228,68 +227,3 @@ def _fill_missing_tiles(
             yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
 
     return joined.mapInPandas(fill, schema=TILE_SCHEMA)
-
-
-def to_geotiff(
-    mosaic_tiles: DataFrame,
-    path: str,
-    tile: int,
-    geo_origin: tuple[float, float],
-    geo_px: float,
-    epsg: int = 4326,
-    nodata: float = float("nan"),
-    max_bytes: int = 1 << 30,
-) -> dict:
-    """Export a geocode_and_merge mosaic to a georeferenced GeoTIFF —
-    the reference's rasterio COG export seam (process.py:1461-1549),
-    written from scratch (functions/geotiff.py; no rasterio in this
-    container). ``geo_origin`` is the TOP-LEFT corner of geo pixel
-    (0, 0) in model coordinates; ``geo_px`` the (square) pixel size;
-    north-up (rows go south), the reference's from_origin convention.
-
-    DRIVER-SIDE by design — a single .tif is a single file (the
-    reference writes it from one process too, process.py:1474). The
-    collect is guarded by a MEASURED byte budget on the DENSE EXTENT
-    the raster actually allocates (max tile edge × max tile edge), not
-    the tile-payload sum — a sparse or offset mosaic's extent can dwarf
-    its payload, which is exactly the shape that would OOM the driver.
-    One cheap metadata agg runs before any tile bytes move; over budget
-    raises with the measured size. Pixels covered by no tile export as
-    ``nodata``. Complex tiles export their magnitude is NOT implied —
-    c8 mosaics are rejected (export amplitude/phase explicitly
-    first)."""
-    from pyspark.sql import functions as F
-
-    from eo_tools_spark.functions.geotiff import write_geotiff
-    from eo_tools_spark.operators.tiles import _decode
-
-    kinds = [r.kind for r in mosaic_tiles.select("kind").distinct().collect()]
-    if kinds != ["f4"]:
-        raise ValueError(
-            f"to_geotiff exports f4 mosaics; got kind(s) {kinds} — export "
-            "amplitude/phase explicitly first"
-        )
-    ext = mosaic_tiles.agg(
-        F.max(F.col("ty").cast("long") * tile + F.col("th")).alias("h"),
-        F.max(F.col("tx").cast("long") * tile + F.col("tw")).alias("w"),
-    ).collect()[0]
-    if ext.h is None:
-        raise ValueError("empty mosaic — nothing to export")
-    est_bytes = int(ext.h) * int(ext.w) * 4
-    if est_bytes > max_bytes:
-        raise ValueError(
-            f"mosaic extent {ext.h}x{ext.w} measures {est_bytes} bytes > "
-            f"max_bytes={max_bytes}; raise the budget explicitly or "
-            "export a sub-extent"
-        )
-    arr = np.full((int(ext.h), int(ext.w)), np.float32(nodata), dtype=np.float32)
-    for r in mosaic_tiles.collect():
-        arr[r.ty * tile: r.ty * tile + r.th,
-            r.tx * tile: r.tx * tile + r.tw] = _decode(
-            bytes(r.data), r.th, r.tw, r.kind
-        )
-    write_geotiff(
-        path, arr, origin=geo_origin, pixel_size=(geo_px, geo_px),
-        epsg=epsg, nodata=nodata,
-    )
-    return {"path": path, "shape": arr.shape, "bytes": est_bytes, "epsg": epsg}

@@ -1,20 +1,11 @@
-"""Burst pairing, burst-range reduction, overlap grouping, ESD mean.
+"""Burst-range reduction and ESD mean.
 
-These are the reference's catalog-level joins/aggregations re-expressed:
+These are the reference's catalog-level aggregations re-expressed:
 
-- ``pair_bursts``: primary×secondary burst pairing by footprint overlap
-  with the 1% tolerance, deriving a SINGLE burst index offset; errors
-  'No overlapping bursts' / 'Overlapping bursts must be consecutive'
-  (/root/reference/eo_tools/S1/process.py:510-526, O(n²) loop there —
-  here a cell-cover self-join + vectorized refine + one aggregation).
 - ``burst_range``: per (product, subswath) min/max burst from the AOI
   join, then range expansion — selection is BY RANGE, gaps included
   (process.py:389-393, download.py:411-415; F.sequence for the expand).
-- ``group_by_overlap``: greedy grouping of products whose footprints
-  overlap ≥99% within the same relative orbit
-  (/root/reference/eo_tools/util.py:77-92). Greedy first-match order is
-  a preserved semantic → runs driver-side on the (small) catalog after
-  a distributed pre-bucketing.
+- ``line_range``: the partial-product line window of a burst range.
 - ``esd_phase_mean``: mean of complex phases per overlap region →
   groupBy(sum re, sum im) + atan2 — associative partial aggregation
   (core.py:1009-1014, process.py:2587-2613).
@@ -22,73 +13,7 @@ These are the reference's catalog-level joins/aggregations re-expressed:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType
-
-from eo_tools_spark.geo import geom as G
-from eo_tools_spark.geo import wkb as W
-
-
-class PairingError(RuntimeError):
-    pass
-
-
-@F.pandas_udf(DoubleType())
-def overlap_ratio_udf(a_wkb: pd.Series, b_wkb: pd.Series) -> pd.Series:
-    out = np.empty(len(a_wkb))
-    for i, (a, b) in enumerate(zip(a_wkb, b_wkb)):
-        out[i] = G.overlap_ratio(
-            W.wkb_to_coords(bytes(a))[0], W.wkb_to_coords(bytes(b))[0]
-        )
-    return pd.Series(out)
-
-
-def pair_bursts(
-    prm: DataFrame,
-    sec: DataFrame,
-    res: int = 9,
-    tol: float = G.HAS_OVERLAP_TOL,
-) -> tuple[DataFrame, int]:
-    """Pair primary/secondary bursts of one subswath by footprint overlap.
-
-    Inputs: (burst:int, footprint:binary WKB). Returns (pairs_df with
-    columns burst_prm, burst_sec, overlap; offset:int). Raises
-    PairingError on empty pairing or non-constant offset — exact parity
-    with process.py:518-526.
-    """
-    from eo_tools_spark.functions.spatial import cover_cells_udf
-
-    p = prm.select(
-        F.col("burst").alias("burst_prm"), F.col("footprint").alias("fp_prm")
-    ).withColumn("_cell", F.explode(cover_cells_udf(F.col("fp_prm"), F.lit(res))))
-    s = sec.select(
-        F.col("burst").alias("burst_sec"), F.col("footprint").alias("fp_sec")
-    ).withColumn("_cell", F.explode(cover_cells_udf(F.col("fp_sec"), F.lit(res))))
-
-    cand = (
-        p.join(s, "_cell")
-        .drop("_cell")
-        .dropDuplicates(["burst_prm", "burst_sec"])
-        .withColumn("overlap", overlap_ratio_udf("fp_prm", "fp_sec"))
-        .where(F.col("overlap") >= 1.0 - tol)
-        .select("burst_prm", "burst_sec", "overlap")
-    )
-    pairs = cand.cache()
-    offsets = [
-        r[0]
-        for r in pairs.select(
-            (F.col("burst_sec") - F.col("burst_prm")).alias("off")
-        ).distinct().collect()
-    ]
-    if not offsets:
-        raise PairingError("No overlapping bursts")  # process.py:518-520 parity
-    if len(offsets) != 1:
-        raise PairingError(
-            "Overlapping bursts must be consecutive"
-        )  # process.py:523-526 parity
-    return pairs, int(offsets[0])
 
 
 def burst_range(joined: DataFrame) -> DataFrame:
@@ -120,48 +45,6 @@ def line_range(burst_range_df: DataFrame, lines_per_burst) -> DataFrame:
         "line_start", lpb * (F.col("min_burst") - 1)
     ).withColumn(
         "number_of_lines", lpb * (F.col("max_burst") - F.col("min_burst") + 1)
-    )
-
-
-def group_by_overlap(
-    catalog: DataFrame,
-    tol: float = G.HAS_OVERLAP_TOL,
-) -> DataFrame:
-    """Greedy overlap grouping of catalog products (util.py:77-92).
-
-    Input: (product_id, orbit:int, footprint:binary). The greedy
-    first-match semantics are order-dependent (reference iterates the
-    GeoDataFrame in row order) → deterministic order = product_id asc.
-    The catalog is small (SAFE products, not pixels); footprints are
-    collected per orbit and grouped driver-side, preserving row parity.
-    Output: (product_id, orbit, group_id).
-    """
-    rows = (
-        catalog.select("product_id", "orbit", "footprint")
-        .orderBy("orbit", "product_id")
-        .collect()
-    )
-    out = []
-    by_orbit: dict[int, list] = {}
-    for r in rows:
-        by_orbit.setdefault(r.orbit, []).append(r)
-    gid = 0
-    for orbit in sorted(by_orbit):
-        groups: list[tuple[int, np.ndarray]] = []
-        for r in by_orbit[orbit]:
-            ring = W.wkb_to_coords(bytes(r.footprint))[0]
-            placed = False
-            for g, rep in groups:
-                if G.overlap_ratio(ring, rep) >= 1.0 - tol:  # first match wins
-                    out.append((r.product_id, orbit, g))
-                    placed = True
-                    break
-            if not placed:
-                groups.append((gid, ring))
-                out.append((r.product_id, orbit, gid))
-                gid += 1
-    return catalog.sparkSession.createDataFrame(
-        out, "product_id string, orbit int, group_id int"
     )
 
 

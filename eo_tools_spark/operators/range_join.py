@@ -18,8 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-ARC_SEC_DEG = 1.0 / 3600.0  # reference buffer unit (core.py:309)
-
 
 def with_bbox_cells(df: DataFrame, res: int, prefix: str = "") -> DataFrame:
     """Add `_cell` exploded from the bbox cover of (minx,miny,maxx,maxy).

@@ -1,7 +1,7 @@
-"""Sentinel-2 band products: reflectance composites + band metadata.
+"""Sentinel-2 band products: reflectance composites.
 
 Reference: /root/reference/eo_tools/S2.py — process_s2_tiles decodes
-bands to reflectance (engine: slc.s2_reflectance + tiles model), then
+bands to reflectance (engine: the tiles model), then
 make_s2_color / _s2_color_composite (S2.py:236-289) stacks 3 reflectance
 bands into an 8-bit color raster: channel = uint8(255 · clip(band, 0, 1)),
 with the fixed composite recipes of _dict_composites (S2.py:258-268).
@@ -100,21 +100,3 @@ def s2_color_composite(
     # groupBy reuses the join's (ty, tx) hash partitioning — no extra
     # exchange — and gives pack() the full row set per tile for the guard
     return joined.groupBy("ty", "tx").applyInPandas(pack, schema=RGB_SCHEMA)
-
-
-#: Sentinel-2 MSI band facts (public ESA mission constants): name,
-#: center wavelength (nm), native resolution (m) — the s2_band_info
-#: lookup (S2.py:296+) as a plain table.
-S2_BANDS = [
-    ("B1", 443, 60), ("B2", 490, 10), ("B3", 560, 10), ("B4", 665, 10),
-    ("B5", 705, 20), ("B6", 740, 20), ("B7", 783, 20), ("B8", 842, 10),
-    ("B8A", 865, 20), ("B9", 945, 60), ("B10", 1375, 60),
-    ("B11", 1610, 20), ("B12", 2190, 20),
-]
-
-
-def s2_band_info(spark) -> DataFrame:
-    """Band metadata table (band, center_nm, resolution_m)."""
-    return spark.createDataFrame(
-        S2_BANDS, "band string, center_nm int, resolution_m int"
-    )

@@ -1,18 +1,7 @@
-"""Burst stitching, overlap blending, terrain scatter-accumulate,
-shadow mask — the reference's azimuth-geometry operators.
+"""Terrain scatter-accumulate and shadow mask — the reference's
+azimuth-geometry operators.
 
 Pinned semantics:
-- burst offset/overlap from azimuth start times
-  (/root/reference/eo_tools/S1/core.py:758-835):
-  offset(b) = (t_b - t_min)/dt, overlap(b) = (t_{b-1} + naz·dt - t_b)/dt
-  rounded; overlap(min_burst) = 0.
-- stitching (process.py:2633-2682): each burst drops its top
-  H = overlap//2 lines; strips are written in burst order into the
-  stitched grid → LAST WRITER WINS on remaining overlap. The Spark
-  version makes the winner explicit: row_number over
-  Window.partitionBy(out_line).orderBy(burst desc).
-- LUT overlap trim + azimuth offset (process.py:2392-2401):
-  az < H → NaN; az += burst_offset.
 - terrain scatter-accumulate (core.py:1377-1529): contributions
   summed (+=) into SAR pixels, untouched pixels → NaN. Spark: emit
   (az, rg, γ) rows → groupBy(az, rg).sum — associative, map-side
@@ -25,116 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
-
-
-# ------------------------------------------------ offsets and overlaps
-
-def burst_offset(az_times: np.ndarray, burst_idx: int, min_burst: int, dt: float) -> float:
-    return (az_times[burst_idx - 1] - az_times[min_burst - 1]) / dt
-
-
-def burst_overlap(az_times: np.ndarray, burst_idx: int, min_burst: int, dt: float, naz: int) -> float:
-    if burst_idx <= min_burst:
-        return 0.0
-    t_prev_end = az_times[burst_idx - 2] + naz * dt
-    return (t_prev_end - az_times[burst_idx - 1]) / dt
-
-
-def stitch_global(bursts: list[np.ndarray], offsets: list[int], overlaps: list[int]) -> np.ndarray:
-    """Numpy oracle of _stitch_bursts (sequential write order)."""
-    naz, nrg = bursts[0].shape
-    out = np.full((offsets[-1] + naz, nrg), np.nan, dtype=bursts[0].dtype)
-    for arr, off, ovl in zip(bursts, offsets, overlaps):
-        H = ovl // 2
-        out[off + H : off + naz] = arr[H:]
-    return out
-
-
-def stitch_bursts_df(
-    burst_lines: DataFrame,
-    lines_per_burst: int,
-) -> DataFrame:
-    """Distributed stitching at line granularity.
-
-    Input rows: (burst:int, line:int, offset:int, overlap:int, payload…)
-    where ``line`` is the line index within the burst. Output: one row
-    per stitched line (out_line), later bursts winning overlaps —
-    row_number over (out_line, burst desc), exactly the reference's
-    write order resolved declaratively."""
-    placed = (
-        burst_lines.withColumn("_H", (F.col("overlap") / 2).cast("int"))
-        .where(F.col("line") >= F.col("_H"))
-        .withColumn("out_line", F.col("offset") + F.col("line"))
-        .drop("_H")
-    )
-    w = Window.partitionBy("out_line").orderBy(F.desc("burst"))
-    return (
-        placed.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def lut_overlap_trim(az: np.ndarray, rg: np.ndarray, burst_overlap_px: int, burst_offset_px: float):
-    """process.py:2392-2401: first H=overlap//2 azimuth lines dropped,
-    azimuth re-based by the burst offset."""
-    H = burst_overlap_px // 2
-    mask = az < H
-    az2 = np.where(mask, np.nan, az + burst_offset_px)
-    rg2 = np.where(mask, np.nan, rg)
-    return az2, rg2
-
-
-# ---------------------------------------------------------- fast ESD
-
-def esd_phase_diffs(prm_bursts: list[np.ndarray], sec_bursts: list[np.ndarray], overlap: int) -> list[float]:
-    """Per burst-boundary: mean phase of the cross interferogram between
-    the current burst's tail and the next burst's head
-    (process.py:2589-2614; complex mean = Σre,Σim → angle, the
-    associative form scatter-reduced by esd_phase_mean at scale)."""
-    out = []
-    for b in range(len(prm_bursts) - 1):
-        tail_p = prm_bursts[b][-overlap:]
-        tail_s = sec_bursts[b][-overlap:]
-        head_p = prm_bursts[b + 1][:overlap]
-        head_s = sec_bursts[b + 1][:overlap]
-        cross = (tail_p * np.conj(tail_s)) * np.conj(head_p * np.conj(head_s))
-        vals = cross[~np.isnan(cross)]
-        out.append(float(np.angle(vals.mean())))
-    return out
-
-
-def esd_ramp(phase_diffs: list[float], idx: int, naz: int, overlap: int) -> np.ndarray:
-    """Azimuth phase ramp for burst ``idx`` (process.py:2574-2585):
-    linear between ±dφ/2 anchored at the half-overlap lines; first/last
-    bursts use their single adjacent boundary."""
-    x = np.arange(naz)
-    xdown, xup = overlap / 2, naz - 1 - overlap / 2
-    if idx == 0:
-        ydown, yup = -phase_diffs[0] / 2, phase_diffs[0] / 2
-    elif idx == len(phase_diffs):
-        ydown, yup = -phase_diffs[-1] / 2, phase_diffs[-1] / 2
-    else:
-        ydown, yup = -phase_diffs[idx - 1] / 2, phase_diffs[idx] / 2
-    slope = (yup - ydown) / (xup - xdown)
-    ramp = slope * x + (ydown - slope * xdown)
-    return ramp
-
-
-def apply_fast_esd(prm_bursts: list[np.ndarray], sec_bursts: list[np.ndarray], overlap: int) -> list[np.ndarray]:
-    """Fast-ESD correction: secondary bursts multiplied by exp(1j·ramp)
-    so phase jumps at burst boundaries cancel (Qin et al. 2018 scheme,
-    process.py:2563-2630). Distributed shape: phase_diffs is a tiny
-    per-boundary aggregate (esd_phase_mean over overlap-region rows);
-    the ramp applies map-side per burst strip."""
-    diffs = esd_phase_diffs(prm_bursts, sec_bursts, overlap)
-    naz = prm_bursts[0].shape[0]
-    out = []
-    for i, s in enumerate(sec_bursts):
-        ramp = esd_ramp(diffs, i, naz, overlap)
-        out.append((s * np.exp(1j * ramp)[:, None]).astype(s.dtype))
-    return out
+from pyspark.sql import DataFrame, functions as F
 
 
 # ------------------------------------------- terrain scatter-aggregate

@@ -550,19 +550,6 @@ def _erode_padded(msk: np.ndarray, th: int, tw: int, h: int, kaz: int, krg: int)
     return s >= kaz * krg - 0.5
 
 
-def tiles_h_alpha(c11: DataFrame, c22: DataFrame, c12: DataFrame) -> DataFrame:
-    """Entropy / mean-alpha from dual-pol covariance tiles: pure
-    per-tile closed-form math (process.py:1796-1940), packed as
-    H + 1j·alpha in one complex tile (raster_id 'halpha')."""
-    stacked = tiles_zip(c11, c22, lambda a, b: a + 1j * b, "c8", "c1122")
-
-    def halpha(x, y):
-        H, alpha = R.h_alpha(x.real, x.imag, y)
-        return H + 1j * alpha
-
-    return tiles_zip(stacked, c12, halpha, "c8", "halpha")
-
-
 def tiles_mosaic(tiles_multi: DataFrame, priority_col: str = "priority") -> DataFrame:
     """Mosaic overlapping rasters on a shared tile grid: per pixel, the
     FIRST non-nodata (non-NaN) value in priority order wins — rasterio
@@ -624,8 +611,8 @@ def tiles_clip_aoi(
             rows = []
             for r in pdf.itertuples():
                 blk = _decode(bytes(r.data), int(r.th), int(r.tw), r.kind).copy()
-                # complex nodata is nan+1j*nan like apply_valid_mask /
-                # _fill_missing_tiles, not nan+0j
+                # complex nodata is nan+1j*nan like _fill_missing_tiles,
+                # not nan+0j
                 nanv = (np.nan + 1j * np.nan) if np.iscomplexobj(blk) else np.nan
                 cols = origin_x + (int(r.tx) * tile + np.arange(r.tw) + 0.5) * px
                 rws = origin_y - (int(r.ty) * tile + np.arange(r.th) + 0.5) * px

@@ -89,11 +89,3 @@ def salted_agg(
 
 def explain_str(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def assert_broadcast_no_shuffle(df: DataFrame) -> None:
-    """Plan check used by tests: the flagship join must contain a
-    broadcast join and no Exchange feeding the probe side scan."""
-    plan = explain_str(df)
-    if "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan:
-        raise AssertionError(f"expected broadcast join in plan:\n{plan}")

@@ -13,17 +13,15 @@ inputs, valid-sample masks, calibration grids, orbit state vectors,
 geolocation-grid burst quads).
 
 Scale shape: one annotation XML is ~1 MB per (product, subswath, pol) —
-side data, not pixel data. ``parse_annotation_table`` runs the parse
-distributed (mapInPandas over a table of XML strings) so a 10^6-product
-catalog ETLs in one narrow pass; the per-product outputs are small
-typed rows that broadcast into the pixel pipelines.
+side data, not pixel data. The ``annotation_etl`` driver query runs
+``parse_annotation`` distributed (one XML string per row) and checks it
+against a DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
-from typing import Iterator
 
 import numpy as np
 
@@ -238,123 +236,3 @@ def burst_polygons(grid: list[dict]) -> dict[int, list[tuple[float, float]]]:
         out[b] = [coords[tr], coords[tl], coords[bl], coords[br]]
     return out
 
-
-# ------------------------------------------------------ Spark ETL wrapper
-
-ANNOTATION_SUMMARY_COLUMNS = [
-    "product_id", "subswath", "start_time", "lines_per_burst",
-    "samples_per_burst", "burst_count", "azimuth_time_interval",
-    "slant_range_time", "number_of_samples", "range_sampling_rate",
-    "azimuth_steering_rate", "radar_frequency",
-]
-
-
-def parse_annotation_table(xml_df):
-    """Distributed annotation ETL: rows (product_id, subswath, xml) →
-    (summary_df, bursts_df, polys_df).
-
-    One narrow mapInPandas pass per output table — no shuffle; the XML
-    payload never leaves its partition. Outputs are the typed side
-    tables the operators consume (deramp, masking, pairing).
-
-    Cost note: each output you MATERIALIZE runs its own parse of the
-    XML (three passes if you collect all three). The parse is ~ms per
-    ~MB annotation, so even a 10^6-product catalog pays minutes per
-    pass; if that matters, persist() the source frame (the parse is
-    CPU-bound, the XML read dominates) or materialize only the tables
-    you need."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StringType, StructField, StructType,
-    )
-
-    summary_schema = StructType(
-        [
-            StructField("product_id", StringType()),
-            StructField("subswath", StringType()),
-            StructField("start_time", StringType()),
-            StructField("lines_per_burst", IntegerType()),
-            StructField("samples_per_burst", IntegerType()),
-            StructField("burst_count", IntegerType()),
-            StructField("azimuth_time_interval", DoubleType()),
-            StructField("slant_range_time", DoubleType()),
-            StructField("number_of_samples", IntegerType()),
-            StructField("range_sampling_rate", DoubleType()),
-            StructField("azimuth_steering_rate", DoubleType()),
-            StructField("radar_frequency", DoubleType()),
-        ]
-    )
-
-    def summarize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                a = parse_annotation(r.xml)
-                rows.append(
-                    (r.product_id, r.subswath, a["start_time"],
-                     a["lines_per_burst"], a["samples_per_burst"],
-                     a["burst_count"], a["azimuth_time_interval"],
-                     a["slant_range_time"], a["number_of_samples"],
-                     a["range_sampling_rate"], a["azimuth_steering_rate"],
-                     a["radar_frequency"])
-                )
-            yield pd.DataFrame(rows, columns=ANNOTATION_SUMMARY_COLUMNS)
-
-    bursts_schema = StructType(
-        [
-            StructField("product_id", StringType()),
-            StructField("subswath", StringType()),
-            StructField("burst", IntegerType()),
-            StructField("azimuth_time", StringType()),
-            StructField("first_valid", ArrayType(IntegerType())),
-            StructField("last_valid", ArrayType(IntegerType())),
-        ]
-    )
-
-    def burst_rows(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                for b in parse_annotation(r.xml)["bursts"]:
-                    rows.append(
-                        (r.product_id, r.subswath, b["burst"], b["azimuth_time"],
-                         b["first_valid"], b["last_valid"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["product_id", "subswath", "burst", "azimuth_time",
-                         "first_valid", "last_valid"],
-            )
-
-    polys_schema = StructType(
-        [
-            StructField("product_id", StringType()),
-            StructField("subswath", StringType()),
-            StructField("kind", StringType()),  # fm_rate | dc_estimate
-            StructField("azimuth_time", StringType()),
-            StructField("coeffs", ArrayType(DoubleType())),
-        ]
-    )
-
-    def poly_rows(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                a = parse_annotation(r.xml)
-                for kind in ("fm_rate", "dc_estimate"):
-                    for p in a[kind]:
-                        rows.append(
-                            (r.product_id, r.subswath, kind,
-                             p["azimuth_time"], p["coeffs"])
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["product_id", "subswath", "kind", "azimuth_time", "coeffs"],
-            )
-
-    src = xml_df.select("product_id", "subswath", "xml")
-    return (
-        src.mapInPandas(summarize, schema=summary_schema),
-        src.mapInPandas(burst_rows, schema=bursts_schema),
-        src.mapInPandas(poly_rows, schema=polys_schema),
-    )

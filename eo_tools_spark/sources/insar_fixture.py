@@ -186,8 +186,8 @@ def tiles_digest(tiles: DataFrame, product: str) -> DataFrame:
 
 G_GEO = 192            # geo grid side
 T_GEO = 64
-SW_W = 128             # each swath's SAR raster is SW_W wide
-SW_OVERLAP = 64        # swath B starts at geo col 64 → cols 64..127 overlap
+SW_W = 128             # each swath's SAR raster is SW_W wide; swath B
+                       # starts at geo col G_GEO - SW_W → cols 64..127 overlap
 
 
 def swath_field(sw: int):

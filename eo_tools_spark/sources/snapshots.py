@@ -443,21 +443,6 @@ class SnapshotTable:
         return work.join(committed, batch_col, "left_anti")
 
 
-def run_checkpointed(
-    work_batches: list[tuple[str, DataFrame]],
-    table: SnapshotTable,
-    fail_after: int | None = None,
-) -> list[dict]:
-    """Drive a batched run with per-batch commits; ``fail_after`` n
-    batches simulates a crash (for resume tests)."""
-    results = []
-    for i, (batch_id, df) in enumerate(work_batches):
-        if fail_after is not None and i >= fail_after:
-            raise RuntimeError(f"simulated crash before batch {batch_id}")
-        results.append(table.append_batch(df, batch_id))
-    return results
-
-
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet")
 
 

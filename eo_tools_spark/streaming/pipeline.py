@@ -1,14 +1,16 @@
-"""Structured Streaming adapter: stream image rows → flagship pipeline
-→ snapshot commits.
+"""Structured Streaming adapters.
 
-Shape: ``readStream`` on a parquet directory (new files = new images) →
-``foreachBatch`` running the batch spatial join + tile assignment →
-``SnapshotTable.append_batch(batch_id=epoch)``. Restart-safe twice over:
-Spark's streaming checkpoint replays an epoch at most once, and the
-snapshot layer skips already-committed batch ids (idempotent).
+``stream_images_to_snapshots``: ``readStream`` on a parquet directory
+(new files = new images) → ``foreachBatch`` running the batch spatial
+join + tile assignment → ``SnapshotTable.append_batch(batch_id=epoch)``.
+Restart-safe twice over: Spark's streaming checkpoint replays an epoch
+at most once, and the snapshot layer skips already-committed batch ids
+(idempotent). ``available_now`` processes the current backlog then
+stops — the batch-incremental mode that mirrors the reference's
+skip-if-exists reruns.
 
-``available_now`` processes the current backlog then stops — the batch-
-incremental mode that mirrors the reference's skip-if-exists reruns.
+``stream_exact_dedup``: first-seen row per md5 content fingerprint,
+state bounded by an event-time watermark.
 """
 
 from __future__ import annotations
@@ -16,146 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from eo_tools_spark.sources.snapshots import SnapshotTable
-
-
-def stream_events_windowed(
-    spark: SparkSession,
-    source_dir: str,
-    source_schema,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Event-time tumbling-window aggregation with a late-data
-    watermark: counts + exact cent-sums per (window, event_type),
-    append-mode parquet sink (windows finalize once the watermark
-    passes). The engine's late-data surface for event streams."""
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-    # watermarks require TIMESTAMP (parquet event tables often carry NTZ)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)")).alias("sum_cents"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_cents",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_sessionize(
-    spark: SparkSession,
-    source_dir: str,
-    source_schema,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_seconds: int = 1800,
-):
-    """Custom stateful streaming operator: gap-based sessionization via
-    ``applyInPandasWithState`` (one GroupState per user).
-
-    Per micro-batch and user: merge new events with the open session in
-    state, split on gaps > ``gap_seconds``, EMIT closed sessions, keep
-    the trailing open session in state. Restart-safe via the streaming
-    checkpoint. This is the engine's custom-stateful surface (SURVEY
-    §2.9 maps the reference's batch idempotency to snapshots; this
-    covers genuinely unbounded event streams).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start", LongType()),
-            StructField("session_end", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("session_start", LongType()),
-            StructField("last_ts", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-
-    def sessionize(key, pdf_iter, state: GroupState):
-        import numpy as np
-
-        (user_id,) = key
-        ts = []
-        for pdf in pdf_iter:
-            ts.append(pdf["t"].to_numpy())
-        t = np.sort(np.concatenate(ts)) if ts else np.array([], dtype=np.int64)
-        if state.exists:
-            s_start, s_last, s_n = state.get
-        else:
-            s_start = s_last = None
-            s_n = 0
-        out = []
-        for v in t.tolist():
-            if s_start is None:
-                s_start, s_last, s_n = v, v, 1
-            elif v - s_last > gap_seconds:
-                out.append((user_id, s_start, s_last, s_n))  # close session
-                s_start, s_last, s_n = v, v, 1
-            else:
-                s_last = v
-                s_n += 1
-        if s_start is not None:
-            state.update((s_start, s_last, s_n))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "session_start", "session_end", "n_events"]
-            )
-
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .select("user_id", F.unix_timestamp(F.col("ts").cast("timestamp")).alias("t"))
-    )
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        sessionize,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_images_to_snapshots(
@@ -220,15 +82,14 @@ def stream_exact_dedup(
 ):
     """Streaming exact dedup: emit each distinct content fingerprint
     AT MOST ONCE WITHIN THE WATERMARK HORIZON (state = fingerprints
-    seen, bounded by an event-time watermark so state is evictable) —
-    the streaming form of the batch ``exact_dedup`` canonicalizer.
+    seen, bounded by an event-time watermark so state is evictable).
 
     NOT a global-uniqueness guarantee: a duplicate whose event time
     arrives after its first-seen state was evicted by the watermark
     (> ``watermark`` later) is re-emitted — that eviction is exactly
     what bounds state at scale. Downstream consumers that need a
-    globally-unique canonical key must dedup again at rest (e.g. batch
-    ``exact_dedup`` over the sink, or MERGE into a keyed table).
+    globally-unique canonical key must dedup again at rest (e.g. an
+    md5 groupBy over the sink, or MERGE into a keyed table).
 
     Built on ``dropDuplicatesWithinWatermark`` over md5(text): native
     Spark state store (RocksDB-ready on a real cluster), no Python in
@@ -254,229 +115,6 @@ def stream_exact_dedup(
     )
     return (
         deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_neardup_candidates(
-    spark: SparkSession,
-    source_dir: str,
-    source_schema,
-    out_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle: int = 1,
-    bands: int = 16,
-    max_bucket: int = 64,
-    state_ttl_ms: int | None = None,
-):
-    """Streaming NEAR-dup candidate detection — dedup-on-ingest: minhash
-    + banded LSH over the stream, with a stateful per-bucket operator
-    (``applyInPandasWithState``) that pairs each arriving document
-    against everything previously seen in its band buckets.
-
-    Stages:
-    1. stateless: minhash signatures (the batch operator's mapInPandas
-       kernel runs unchanged on the streaming frame) → band keys via
-       ``dedup.band_key_cols`` — bucket assignment is IDENTICAL to the
-       batch ``lsh_pairs`` by construction;
-    2. stateful: one GroupState per (band, key) holds the bucket's
-       member ids in ARRIVAL ORDER, capped at ``max_bucket``. A new doc
-       emits (id_a, id_b, band, key) against every current member, then
-       joins the state. Members past the cap are neither paired nor
-       remembered — the streaming form of the batch hot-bucket cap
-       (``cap_hot_buckets``): a degenerate band key (boilerplate) would
-       otherwise grow state and emit quadratically, forever.
-
-    Semantics: the emitted-pair set equals, as a set, the batch
-    ``lsh_pairs`` candidates over the docs seen so far whenever no
-    bucket exceeds the cap (pytest-pinned); the SAME pair may be
-    emitted once per shared band (at-least-once per pair — batch does a
-    global distinct the stream cannot, in append mode, without a second
-    stateful stage), so downstream exact-verify/clustering must be
-    idempotent — verify_jaccard and connected_components both are.
-
-    Scale shape: state = (bucket key → ≤ max_bucket ids); bucket COUNT
-    grows with the corpus — on a long-running deployment pass
-    ``state_ttl_ms`` to expire idle buckets
-    (GroupStateTimeout.ProcessingTimeTimeout: the TTL clock resets every
-    time the bucket receives a doc), accepting that a dup arriving after
-    its bucket expired is missed, exactly the watermark-horizon trade
-    stream_exact_dedup documents. Default ``None`` keeps all bucket
-    state forever (right for bounded backfills, wrong for unbounded
-    ingest). Ids must be longs (state schema is typed).
-
-    Exactly-once pair emission: chain
-    ``stream_neardup_pairs_distinct`` over this operator's sink — Spark
-    does not allow two applyInPandasWithState stages in one query, so
-    the global distinct is a cascaded second streaming query.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from eo_tools_spark.operators.dedup import band_key_cols, minhash_signatures
-
-    out_schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("band", IntegerType()),
-            StructField("key", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("ids", ArrayType(LongType()))])
-
-    def emit_pairs(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            # idle past the TTL: drop the bucket (docs arriving later
-            # start a fresh bucket — the documented missed-dup trade)
-            for _ in pdf_iter:
-                pass
-            state.remove()
-            return
-        band_, key_ = key
-        seen = list(state.get[0]) if state.exists else []
-        new = []
-        for pdf in pdf_iter:
-            new.extend(int(v) for v in pdf[id_col])
-        rows = []
-        for d in sorted(set(new) - set(seen)):
-            if len(seen) >= max_bucket:
-                break  # capped bucket: no pairs, no growth (see docstring)
-            rows.extend(
-                (min(d, s), max(d, s), band_, key_) for s in seen
-            )
-            seen.append(d)
-        state.update((seen,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        if rows:
-            yield pd.DataFrame(rows, columns=["id_a", "id_b", "band", "key"])
-
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    sig = minhash_signatures(
-        stream.select(id_col, text_col),
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        shingle=shingle,
-    )
-    banded = sig.select(id_col, band_key_cols(bands))
-    cand = banded.groupBy("band", "key").applyInPandasWithState(
-        emit_pairs,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
-    return (
-        cand.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_neardup_pairs_distinct(
-    spark: SparkSession,
-    cand_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    state_ttl_ms: int | None = None,
-):
-    """Opt-in EXACTLY-ONCE pair emission over the
-    ``stream_neardup_candidates`` sink: a cascaded streaming query
-    (Spark forbids two applyInPandasWithState stages in one query) that
-    keeps one marker GroupState per canonical (id_a, id_b) and emits the
-    pair only the first time any band produces it — per-band duplicates
-    collapse, turning the upstream at-least-once-per-shared-band
-    contract into exactly-once for downstream consumers that aren't
-    idempotent.
-
-    State cost (document before opting in): ONE entry per distinct pair
-    ever emitted — two longs + store overhead, growing with the
-    all-time pair count, strictly more state than the upstream bucket
-    stage. ``state_ttl_ms`` expires idle pair markers
-    (ProcessingTimeTimeout); a pair re-surfacing after expiry is
-    re-emitted — the same bounded-state trade as the bucket TTL and
-    stream_exact_dedup's watermark horizon.
-
-    Output columns: (id_a, id_b). Restart-safe: the streaming
-    checkpoint covers both the source offsets and the state store, so a
-    rerun emits nothing new (pytest-pinned).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [StructField("id_a", LongType()), StructField("id_b", LongType())]
-    )
-    state_schema = StructType([StructField("seen", BooleanType())])
-
-    def emit_once(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            for _ in pdf_iter:
-                pass
-            state.remove()
-            return
-        for _ in pdf_iter:
-            pass  # row contents carry nothing beyond the group key
-        first = not state.exists
-        state.update((True,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        if first:
-            yield pd.DataFrame({"id_a": [key[0]], "id_b": [key[1]]})
-
-    stream = (
-        spark.readStream.schema("id_a long, id_b long, band int, key long")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(cand_dir)
-    )
-    dist = stream.groupBy("id_a", "id_b").applyInPandasWithState(
-        emit_once,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if state_ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
-    return (
-        dist.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

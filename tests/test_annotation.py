@@ -9,7 +9,6 @@ import pytest
 from eo_tools_spark.sources.annotation import (
     location_grid_burst_count,
     parse_annotation,
-    parse_annotation_table,
     parse_calibration,
     parse_orbit_eof,
     xml_to_dict,
@@ -251,31 +250,6 @@ class TestOrbitEOF:
         assert len(eta) == 1507
         # ka < 0, ks > 0 → kt = ka·ks/(ka−ks) must be positive
         assert (kt > 0).all()
-
-
-class TestSparkAnnotationETL:
-    def test_distributed_parse(self, spark):
-        xmls = [
-            ("P1", "IW1", annotation_xml(burst_count=3, lines_per_burst=100)),
-            ("P1", "IW2", annotation_xml(burst_count=4, lines_per_burst=100)),
-            ("P2", "IW1", annotation_xml(burst_count=2, lines_per_burst=50)),
-        ]
-        df = spark.createDataFrame(xmls, "product_id string, subswath string, xml string")
-        summary, bursts, polys = parse_annotation_table(df)
-        s = {(r.product_id, r.subswath): r for r in summary.collect()}
-        assert s[("P1", "IW2")].burst_count == 4
-        assert s[("P2", "IW1")].lines_per_burst == 50
-        assert s[("P1", "IW1")].samples_per_burst == 23055
-        b = bursts.toPandas()
-        assert len(b) == 3 + 4 + 2
-        assert (
-            b[(b.product_id == "P1") & (b.subswath == "IW2")]["burst"].tolist()
-            == [1, 2, 3, 4]
-        )
-        p = polys.toPandas()
-        # 2 fm + 2 dc per annotation
-        assert len(p) == 3 * 4
-        assert set(p["kind"]) == {"fm_rate", "dc_estimate"}
 
 
 class TestBurstPolygons:

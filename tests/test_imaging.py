@@ -155,14 +155,6 @@ class TestImageTable:
             d = bin((r.phash ^ r.phash2) & (2**64 - 1)).count("1")
             assert d <= 4
 
-    def test_thumbnails(self, spark):
-        from eo_tools_spark.operators.image_pipeline import thumbnails
-        from eo_tools_spark.sources.synthetic import images_table
-
-        t = thumbnails(images_table(spark, 12, partitions=2)).toPandas()
-        assert len(t) == 12
-        assert all(len(r.thumb) == 32 * 32 for r in t.itertuples())
-
     def test_phash_neardup_finds_self_similar(self, spark):
         from eo_tools_spark.operators.image_pipeline import phash_neardup
         from eo_tools_spark.sources.synthetic import images_table

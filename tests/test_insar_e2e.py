@@ -1,8 +1,8 @@
 """End-to-end InSAR pipeline integration test.
 
-The Spark pipeline (pairing → per-burst geocode LUTs → coregistration →
-aligned resample → interferogram → coherence → stitch) must equal a
-pure-numpy oracle chain built from the same kernels' single-array forms
+The Spark pipeline (coregistration LUTs → aligned resample →
+interferogram → coherence → stitch) must equal a pure-numpy oracle
+chain built from the same kernels' single-array forms
 — the engine analog of the reference's full-processor golden outputs
 (/root/reference/data/test-full-processor, scripts/test-s1-*.py).
 
@@ -17,14 +17,12 @@ from pyspark.sql import functions as F
 from eo_tools_spark.functions import raster as R
 from eo_tools_spark.operators.coreg import coregister
 from eo_tools_spark.operators.geocode import range_doppler, remap
-from eo_tools_spark.operators.pairing import pair_bursts
 from eo_tools_spark.operators.tiles import (
     raster_to_tiles,
     tiles_coherence,
     tiles_interferogram,
     tiles_to_raster,
 )
-from eo_tools_spark.geo.wkb import polygon_to_wkb
 
 
 NAZ, NRG = 64, 64
@@ -83,29 +81,6 @@ class TestInsarPipeline:
         # of coregistration
         coh_raw = R.coherence(prm, sec, 5, 5).astype(np.float32)
         assert np.nanmean(coh_raw[8:-8, 8:-8]) < 0.4
-
-    def test_pairing_to_lut_chain(self, spark):
-        """Catalog-level chain: burst pairing offset drives which
-        secondary burst aligns with which primary burst."""
-        def quads(n, y0=0.0):
-            rows = []
-            for b in range(1, n + 1):
-                ylo = y0 + (b - 1) * 0.18
-                rows.append(
-                    (b, polygon_to_wkb([(0, ylo), (1, ylo), (1, ylo + 0.2), (0, ylo + 0.2)]))
-                )
-            return rows
-
-        prm_fp = spark.createDataFrame(quads(5), "burst int, footprint binary")
-        sec_fp = spark.createDataFrame(
-            [(b + 1, fp) for b, fp in quads(5)], "burst int, footprint binary"
-        )
-        pairs, offset = pair_bursts(prm_fp, sec_fp)
-        assert offset == 1
-        # the reference uses the offset to fetch sec burst b+offset for
-        # prm burst b (process.py:2344-2346)
-        got = {(r.burst_prm, r.burst_sec) for r in pairs.collect()}
-        assert got == {(b, b + 1) for b in range(1, 6)}
 
     def test_geocode_lut_roundtrip(self):
         """LUT produced by range_doppler is consistent: remapping the

@@ -6,15 +6,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from eo_tools_spark.geo import polygon_to_wkb
 from eo_tools_spark.operators.knn import TileIndex, knn_join
-from eo_tools_spark.operators.pairing import (
-    PairingError,
-    burst_range,
-    group_by_overlap,
-    line_range,
-    pair_bursts,
-)
+from eo_tools_spark.operators.pairing import burst_range, line_range
 from eo_tools_spark.operators.range_join import bbox_intersect_join
 
 
@@ -261,36 +254,7 @@ class TestBBoxJoin:
         assert {r.dem_tile_id for r in buf.collect()} == {"A", "B"}
 
 
-def burst_quads(n, x0=0.0, y0=0.0, step=0.18, h=0.2, overlap=0.02):
-    """Adjacent along-track quads with ~10% azimuth overlap — the
-    FIXTURES.md burst-footprint shape."""
-    rows = []
-    for b in range(1, n + 1):
-        ylo = y0 + (b - 1) * step
-        rows.append((b, polygon_to_wkb([(x0, ylo), (x0 + 1.0, ylo), (x0 + 1.0, ylo + h), (x0, ylo + h)])))
-    return rows
-
-
 class TestPairing:
-    def test_offset_detected(self, spark):
-        prm = spark.createDataFrame(burst_quads(9), "burst int, footprint binary")
-        # secondary shifted by exactly one burst step → offset -1 matches
-        # burst b_prm with footprint at index b_prm, i.e. sec burst = prm+1
-        sec_rows = [(b + 1, fp) for b, fp in burst_quads(9)]
-        sec = spark.createDataFrame(sec_rows, "burst int, footprint binary")
-        pairs, offset = pair_bursts(prm, sec)
-        assert offset == 1
-        got = {(r.burst_prm, r.burst_sec) for r in pairs.collect()}
-        assert got == {(b, b + 1) for b in range(1, 10)}
-
-    def test_no_overlap_raises(self, spark):
-        prm = spark.createDataFrame(burst_quads(4), "burst int, footprint binary")
-        sec = spark.createDataFrame(
-            burst_quads(4, x0=50.0), "burst int, footprint binary"
-        )
-        with pytest.raises(PairingError, match="No overlapping bursts"):
-            pair_bursts(prm, sec)
-
     def test_burst_range_fills_gaps(self, spark):
         df = spark.createDataFrame(
             [("P1", "IW1", 2), ("P1", "IW1", 5), ("P1", "IW2", 3)],
@@ -325,21 +289,3 @@ class TestPairing:
             m = grp == g
             exp = np.angle(np.mean(re[m] + 1j * im[m]))
             assert out[g] == pytest.approx(exp, abs=1e-12)
-
-    def test_group_by_overlap_greedy(self, spark):
-        near_identical = polygon_to_wkb([(0, 0), (10, 0), (10, 10), (0, 10)])
-        shifted_tiny = polygon_to_wkb([(0.01, 0), (10.01, 0), (10.01, 10), (0.01, 10)])
-        far = polygon_to_wkb([(50, 0), (60, 0), (60, 10), (50, 10)])
-        cat = spark.createDataFrame(
-            [
-                ("A", 1, bytearray(near_identical)),
-                ("B", 1, bytearray(shifted_tiny)),
-                ("C", 1, bytearray(far)),
-                ("D", 2, bytearray(near_identical)),
-            ],
-            "product_id string, orbit int, footprint binary",
-        )
-        out = {r.product_id: r.group_id for r in group_by_overlap(cat).collect()}
-        assert out["A"] == out["B"]  # ≥99% overlap → same group
-        assert out["C"] != out["A"]
-        assert out["D"] != out["A"]  # different orbit never groups

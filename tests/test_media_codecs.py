@@ -211,12 +211,14 @@ class TestMp4:
         assert e1 == (1, 3, 1) and e2 == (3, 1, 1)
 
     def test_meta_without_decode(self):
-        from eo_tools_spark.functions.media import encode_mp4, mp4_meta
+        from eo_tools_spark.functions.media import _parse_mp4, encode_mp4
 
         f = np.zeros((6, 8, 10, 3), dtype=np.uint8)
-        m = mp4_meta(encode_mp4(f, fps=25))
-        assert m == {"codec": "jpeg", "width": 10, "height": 8,
-                     "n_samples": 6, "timescale": 25, "duration": 6}
+        m = _parse_mp4(encode_mp4(f, fps=25))
+        assert {k: m[k] for k in ("codec", "width", "height", "n_samples",
+                                  "timescale", "duration")} == {
+            "codec": "jpeg", "width": 10, "height": 8,
+            "n_samples": 6, "timescale": 25, "duration": 6}
 
     def test_co64_offsets_supported(self):
         """Rewrite stco → co64 (64-bit chunk offsets, the >4 GiB file
@@ -249,14 +251,14 @@ class TestMp4:
     def test_bitstream_codec_raises_with_metadata(self):
         """avc1 (H.264) sample entries parse but decode honestly
         raises — the message carries the parsed geometry."""
-        from eo_tools_spark.functions.media import decode_mp4, encode_mp4, mp4_meta
+        from eo_tools_spark.functions.media import _parse_mp4, decode_mp4, encode_mp4
 
         f = np.zeros((3, 6, 4, 3), dtype=np.uint8)
         b = bytearray(encode_mp4(f))
         i = b.index(b"stsd") + 4
         j = bytes(b).index(b"jpeg", i)
         b[j:j + 4] = b"avc1"
-        m = mp4_meta(bytes(b))
+        m = _parse_mp4(bytes(b))
         assert m["codec"] == "avc1" and (m["width"], m["height"]) == (4, 6)
         with pytest.raises(NotImplementedError, match="avc1.*4x6, 3 samples"):
             decode_mp4(bytes(b))
@@ -286,7 +288,7 @@ class TestMp4:
         """Every fixed-offset unpack inside the parser must surface as
         the documented ValueError — including truncation inside a
         largesize header and mid-sample-table cuts."""
-        from eo_tools_spark.functions.media import decode_mp4, encode_mp4, mp4_meta
+        from eo_tools_spark.functions.media import _parse_mp4, decode_mp4, encode_mp4
 
         # truncated inside a 64-bit largesize header
         with pytest.raises(ValueError):
@@ -296,7 +298,7 @@ class TestMp4:
         full = encode_mp4(np.zeros((3, 4, 4, 3), dtype=np.uint8))
         for cut in range(0, len(full), 7):
             try:
-                mp4_meta(full[:cut])
+                _parse_mp4(full[:cut])
             except ValueError:
                 pass
 

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from eo_tools_spark.operators.s2 import COMPOSITES, s2_color_composite, s2_band_info
+from eo_tools_spark.operators.s2 import COMPOSITES, s2_color_composite
 from eo_tools_spark.operators.tiles import raster_to_tiles
 
 
@@ -62,8 +62,3 @@ class TestS2Composite:
         from eo_tools_spark.sources.annotation import burst_polygons
 
         assert burst_polygons([]) == {}
-
-    def test_band_info(self, spark):
-        df = s2_band_info(spark).toPandas()
-        assert len(df) == 13
-        assert int(df[df.band == "B8A"].resolution_m.iloc[0]) == 20

@@ -1,68 +1,15 @@
-"""Stitching / scatter-accumulate / shadow semantics tests."""
+"""Scatter-accumulate / terrain gamma / shadow semantics tests."""
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from eo_tools_spark.operators.sar_geom import (
-    burst_offset,
-    burst_overlap,
-    lut_overlap_trim,
     scatter_accumulate,
     scatter_to_dense,
     shadow_mask,
-    stitch_bursts_df,
-    stitch_global,
     terrain_scatter_oracle,
 )
-
-
-class TestOffsets:
-    def test_offset_overlap_arithmetic(self):
-        # bursts every 90 lines of 100 → 10-line overlap
-        dt = 0.002
-        naz = 100
-        az_times = np.array([0.0, 90 * dt, 180 * dt, 270 * dt])
-        assert burst_offset(az_times, 1, 1, dt) == pytest.approx(0.0)
-        assert burst_offset(az_times, 3, 1, dt) == pytest.approx(180.0)
-        assert burst_overlap(az_times, 1, 1, dt, naz) == 0.0
-        assert burst_overlap(az_times, 2, 1, dt, naz) == pytest.approx(10.0)
-
-    def test_lut_trim(self):
-        az = np.arange(10.0)
-        rg = np.ones(10)
-        az2, rg2 = lut_overlap_trim(az, rg, burst_overlap_px=6, burst_offset_px=90.0)
-        assert np.isnan(az2[:3]).all() and np.isnan(rg2[:3]).all()
-        assert az2[3] == pytest.approx(93.0) and rg2[3] == 1.0
-
-
-class TestStitch:
-    def test_df_equals_global_oracle(self, spark):
-        rng = np.random.default_rng(4)
-        naz, nrg = 20, 1
-        nb = 4
-        offsets = [0, 15, 30, 45]  # 5-line overlaps
-        overlaps = [0, 5, 5, 5]
-        bursts = [rng.normal(size=(naz, nrg)).astype(np.float32) for _ in range(nb)]
-        exp = stitch_global(bursts, offsets, overlaps)
-
-        rows = []
-        for b in range(nb):
-            for line in range(naz):
-                rows.append(
-                    (b + 1, line, offsets[b], overlaps[b], float(bursts[b][line, 0]))
-                )
-        df = spark.createDataFrame(
-            rows, "burst int, line int, offset int, overlap int, val double"
-        )
-        out = stitch_bursts_df(df, naz).toPandas().sort_values("out_line")
-        got = np.full(exp.shape[0], np.nan)
-        got[out.out_line.to_numpy()] = out.val.to_numpy()
-        np.testing.assert_allclose(got, exp[:, 0], rtol=1e-6, equal_nan=True)
-        # overlap rows resolved to the LATER burst (write-order parity)
-        ovl_row = out[out.out_line == 17]  # burst2 region [15..) overlaps burst1 [0,20)
-        assert ovl_row.burst.iloc[0] == 2
 
 
 class TestScatter:
@@ -84,48 +31,6 @@ class TestScatter:
         out = scatter_accumulate(df).toPandas()
         got = scatter_to_dense(out, naz, nrg)
         np.testing.assert_allclose(got, exp, rtol=1e-9, equal_nan=True)
-
-
-class TestFastESD:
-    def test_removes_synthetic_phase_jumps(self):
-        """Bursts whose secondary carries a constant per-burst phase
-        offset: fast ESD must flatten the boundary phase jumps
-        (process.py:2563-2630 / Qin et al. 2018)."""
-        from eo_tools_spark.operators.sar_geom import (
-            apply_fast_esd,
-            esd_phase_diffs,
-        )
-
-        rng = np.random.default_rng(6)
-        naz, nrg, overlap, nb = 40, 30, 8, 4
-        base = (rng.normal(size=((nb + 1) * naz, nrg))
-                + 1j * rng.normal(size=((nb + 1) * naz, nrg))).astype(np.complex64)
-        offsets = [0.0, 0.5, 1.0, 1.5]  # constant 0.5 rad jump per boundary
-        prm, sec = [], []
-        for b in range(nb):
-            strip = base[b * (naz - overlap) : b * (naz - overlap) + naz]
-            prm.append(strip)
-            sec.append((strip * np.exp(-1j * offsets[b])).astype(np.complex64))
-
-        diffs = esd_phase_diffs(prm, sec, overlap)
-        # sec_b = strip·e^{-iφ_b} → ifg_b carries e^{+iφ_b} → cross
-        # ifg1·conj(ifg2) = e^{i(φ_b−φ_{b+1})} = e^{-i·0.5}
-        np.testing.assert_allclose(diffs, [-0.5, -0.5, -0.5], atol=1e-5)
-
-        corrected = apply_fast_esd(prm, sec, overlap)
-        # boundary jump after correction: cross-ifg phase ≈ 0
-        post = esd_phase_diffs(prm, corrected, overlap)
-        assert np.max(np.abs(post)) < 0.05
-
-    def test_identical_bursts_no_ramp(self):
-        from eo_tools_spark.operators.sar_geom import apply_fast_esd
-
-        rng = np.random.default_rng(7)
-        b = [(rng.normal(size=(20, 10)) + 1j * rng.normal(size=(20, 10))).astype(np.complex64)
-             for _ in range(3)]
-        out = apply_fast_esd(b, [x.copy() for x in b], overlap=4)
-        for orig, got in zip(b, out):
-            np.testing.assert_allclose(got, orig, atol=1e-5)
 
 
 class TestTerrainGamma:

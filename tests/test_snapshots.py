@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from eo_tools_spark.sources.snapshots import SnapshotTable, run_checkpointed
+from eo_tools_spark.sources.snapshots import SnapshotTable
 
 
 def make_batches(spark, n=4, rows=100):
@@ -46,20 +46,23 @@ def test_crash_resume_equals_oneshot(spark, tmp_path):
 
     # one-shot reference run
     t_ref = SnapshotTable(spark, str(tmp_path / "ref"))
-    run_checkpointed(batches, t_ref)
+    for bid, df in batches:
+        t_ref.append_batch(df, bid)
     ref_rows = {r.id for r in t_ref.read().collect()}
 
-    # crashed run: 2 batches commit, then crash
+    # crashed run: 2 batches commit, then the run dies
     t = SnapshotTable(spark, str(tmp_path / "crash"))
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_checkpointed(batches, t, fail_after=2)
+    for bid, df in batches[:2]:
+        t.append_batch(df, bid)
     assert len(t.committed_batches()) == 2
 
     # resume: anti-join work list → only remaining batches run
     work = spark.createDataFrame([(b,) for b, _ in batches], "batch_id string")
     remaining = {r.batch_id for r in t.remaining_work(work, "batch_id").collect()}
     assert remaining == {"b002", "b003"}
-    run_checkpointed([x for x in batches if x[0] in remaining], t)
+    for bid, df in batches:
+        if bid in remaining:
+            t.append_batch(df, bid)
     assert {r.id for r in t.read().collect()} == ref_rows
 
 

@@ -1,7 +1,6 @@
-"""STAC search + partial-download planning: the reference's client-side
-semantics (validation contracts, filters, output schema, manifest
-shape) with the network as a seam
-(/root/reference/eo_tools/S1/download.py:29-111, 114-243, 276-443)."""
+"""Partial-download planning: the reference's job-list semantics
+(validation contracts, burst selection, line windows, asset files)
+(/root/reference/eo_tools/S1/download.py:114-243, 276-443)."""
 
 import numpy as np
 import pytest
@@ -32,52 +31,6 @@ class TestNormalizePolarizations:
             stac.normalize_polarizations(42)
         with pytest.raises(ValueError):
             stac.normalize_polarizations([])
-
-
-class TestSearchContracts:
-    def _items(self, spark):
-        rows = [
-            ("P1", "2020-01-01 00:00:00", 44, "ascending", box_to_wkb(1, 1, 3, 3)),
-            ("P2", "2020-06-01 00:00:00", 44, "descending", box_to_wkb(5, 5, 8, 8)),
-            ("P3", "2021-01-01 00:00:00", 95, "ascending", box_to_wkb(20, 20, 30, 30)),
-        ]
-        return spark.createDataFrame(
-            rows,
-            "id string, start_time_s string, relative_orbit int, "
-            "orbit_state string, footprint binary",
-        ).selectExpr(
-            "id", "CAST(start_time_s AS TIMESTAMP) AS start_time",
-            "relative_orbit", "orbit_state", "footprint",
-        )
-
-    def test_requires_datetime_or_ids(self, spark):
-        with pytest.raises(ValueError, match="At least one of datetime or ids"):
-            stac.stac_search(self._items(spark), AOI)
-
-    def test_ids_must_be_nonempty_strings(self, spark):
-        items = self._items(spark)
-        for bad in ("P1", [], [1, 2]):
-            with pytest.raises(ValueError, match="non-empty sequence"):
-                stac.stac_search(items, AOI, ids=bad)
-
-    def test_intersects_and_datetime_range(self, spark):
-        items = self._items(spark)
-        # AOI covers P1+P2 footprints; P3 is outside
-        got = stac.stac_search(items, AOI, datetime="2019-01-01/2022-01-01")
-        ids = {r["id"] for r in got.collect()}
-        assert ids == {"P1", "P2"}
-        # half-open interval (pystac '..' convention)
-        got = stac.stac_search(items, AOI, datetime="2020-03-01/..")
-        assert {r["id"] for r in got.collect()} == {"P2"}
-        # output schema mirrors the reference GeoDataFrame columns
-        assert got.columns[:4] == [
-            "id", "startTimeFromAscendingNode", "relativeOrbitNumber",
-            "orbitDirection",
-        ]
-
-    def test_ids_filter(self, spark):
-        got = stac.stac_search(self._items(spark), AOI, ids=["P2", "P3"])
-        assert {r["id"] for r in got.collect()} == {"P2"}
 
 
 class TestPlanPartialDownloads:
@@ -134,17 +87,16 @@ class TestPlanPartialDownloads:
             self._bursts(spark), AOI, lines_per_burst=1500, pol="vv",
             assets=assets,
         )
-        info = stac.partial_manifest(jobs, "P1")
-        assert info["product_id"] == "P1"
-        assert info["aoi_file"] == "partial_aoi.geojson"
-        e = info["subsets"]["iw1"]["vv"]
-        # download.py:428-435 entry shape, file = measurement/<basename>
-        assert e == {
-            "file": "measurement/s1a-iw1-slc-vv-p1.tiff",
-            "min_burst": 2, "max_burst": 5,
+        by = {(r["product_id"], r["subswath"]): r.asDict() for r in jobs.collect()}
+        # download.py:425-435: file = measurement/<href basename>
+        assert by[("P1", "IW1")] == {
+            "product_id": "P1", "subswath": "IW1", "pol": "vv",
+            "min_burst": 2, "max_burst": 5, "lines_per_burst": 1500,
             "line_start": 1500, "number_of_lines": 6000,
-            "lines_per_burst": 1500,
+            "href": "s3://b/P1.SAFE/measurement/s1a-iw1-slc-vv-p1.tiff",
+            "file": "measurement/s1a-iw1-slc-vv-p1.tiff",
         }
+        assert by[("P1", "IW2")]["file"] == "measurement/s1a-iw2-slc-vv-p1.tiff"
 
     def test_per_product_lines_per_burst_frame(self, spark):
         lpb = spark.createDataFrame(
@@ -159,30 +111,8 @@ class TestPlanPartialDownloads:
         assert by[("P1", "IW2")]["line_start"] == 0
         assert by[("P1", "IW2")]["number_of_lines"] == 1800
 
-    def test_run_requires_fetcher_seam(self, spark):
-        jobs = stac.plan_partial_downloads(
-            self._bursts(spark), AOI, lines_per_burst=1500, pol="vv"
-        )
-        with pytest.raises(NotImplementedError, match="fetcher"):
-            stac.run_partial_downloads(jobs)
-        seen = []
-        n = stac.run_partial_downloads(jobs, fetcher=seen.append)
-        assert n == 2 and len(seen) == 2
-        assert {j["subswath"] for j in seen} == {"IW1", "IW2"}
-
 
 class TestGeojsonSidecar:
-    def test_partial_aoi_geojson_shape(self):
-        doc = stac.partial_aoi_geojson(AOI)
-        import json as _json
-
-        parsed = _json.loads(doc)
-        assert parsed["type"] == "FeatureCollection"
-        geom = parsed["features"][0]["geometry"]
-        assert geom["type"] == "Polygon"
-        assert geom["coordinates"][0][0] == [0.0, 0.0]
-        assert doc.endswith("\n")
-
     def test_validate_rejects_non_polygon(self):
         with pytest.raises(ValueError, match="must not be an empty"):
             stac.validate_single_ring(np.zeros((2, 2)), "shp")

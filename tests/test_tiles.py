@@ -163,24 +163,6 @@ class TestDualPolCovariance:
         np.testing.assert_allclose(got_c11, exp_c11, rtol=1e-4, atol=1e-5, equal_nan=True)
         np.testing.assert_allclose(got_c12, exp_c12, rtol=1e-4, atol=1e-5, equal_nan=True)
 
-    def test_h_alpha_tiles(self, spark):
-        """tiles_h_alpha == functions.raster.h_alpha per pixel."""
-        from eo_tools_spark.operators.tiles import tiles_h_alpha, tiles_zip
-
-        rng = np.random.default_rng(22)
-        c11 = rng.uniform(0.5, 2, (64, 64)).astype(np.float32)
-        c22 = rng.uniform(0.5, 2, (64, 64)).astype(np.float32)
-        c12 = (rng.normal(size=(64, 64)) + 1j * rng.normal(size=(64, 64))).astype(np.complex64) * 0.3
-        t11 = raster_to_tiles(spark, c11, "c11", 32)
-        t22 = raster_to_tiles(spark, c22, "c22", 32)
-        t12 = raster_to_tiles(spark, c12, "c12", 32)
-        got = tiles_to_raster(tiles_h_alpha(t11, t22, t12), 32)
-        H_exp, a_exp = R.h_alpha(
-            c11.astype(np.float64), c22.astype(np.float64), c12.astype(np.complex128)
-        )
-        np.testing.assert_allclose(got.real, H_exp, rtol=1e-4, atol=1e-5)
-        np.testing.assert_allclose(got.imag, a_exp, rtol=1e-4, atol=1e-5)
-
 
 class TestEigh:
     def test_single_mechanism_simulation(self):
