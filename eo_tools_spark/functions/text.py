@@ -11,7 +11,9 @@ Two layers:
    scale-path minhash/simhash with H=64 — one md5 per *unique* token per
    batch, then a uint64 affine hash family, instead of H md5s per token.
 
-Cross-engine parity rules (discovered by test, see tests/test_text.py):
+Cross-engine parity rules (checked against DuckDB recomputations in
+tests/test_dedup_similarity.py: TestWinnowing, TestDecontaminate,
+TestRepetitionStats):
 - md5 hex is identical; 15 hex chars → BIGINT via Spark ``conv`` /
   DuckDB ``'0x'||`` cast — identical 60-bit values.
 - ``split(text, ' ')`` and ``string_split`` both keep empty strings.

@@ -1,5 +1,4 @@
-"""Coregistration (LUT scatter join) + topographic phase + orbit
-interpolation.
+"""Coregistration (LUT scatter join).
 
 - ``coregister``: project secondary (az, rg) LUT into the primary pixel
   grid by splitting each DEM quad into 2 triangles and barycentric-
@@ -8,22 +7,13 @@ interpolation.
   l1≥0 ∧ l2≥0 ∧ l1+l2<1, vertex orders (0,1,2) and (3,1,2), quads
   processed in row-major order, later writes win). The inner pixel loop
   is vectorized per quad; the quad loop runs inside per-tile UDFs.
-- ``phi_topo``: topographic phase (4π/λ)(rg·dr + r0) with
-  r0 = slant_range_time·c/2, dr = c/(2·fsr) (core.py:728-756, constants
-  folded at core.py:485-488).
-- ``hermite_interp``: cubic Hermite orbit interpolation (positions +
-  velocities → C1 spline), the reference's default interpolator
-  (core.py:1095-1110, scipy CubicHermiteSpline semantics) without scipy.
-- ``sv_window``: ±t_pad state-vector selection around a burst interval
-  (t_pad = 360 s, core.py:441-446).
+- ``coreg_project``: the same projection distributed over node blocks
+  (halo explode, batched quad kernel, one ``max_by`` reduce).
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-C0 = 299792458.0
-
 
 #: per-call output budget for the LOCAL coregister kernel: a full S1
 #: burst LUT (~1500 × 25000 ≈ 37M px) exceeds this on purpose — the
@@ -312,103 +302,3 @@ def coreg_project(nodes, naz: int, nrg: int, block: int = 64):
                 F.col("v.v_az").alias("az_s"), F.col("v.v_rg").alias("rg_s"))
     )
 
-
-def phi_topo(rg: np.ndarray, radar_frequency: float, slant_range_time: float, range_sampling_rate: float) -> np.ndarray:
-    lam = C0 / radar_frequency
-    r0 = slant_range_time * C0 / 2.0
-    dr = C0 / (2.0 * range_sampling_rate)
-    return (4.0 * np.pi / lam) * (rg * dr + r0)
-
-
-def hermite_interp(t: np.ndarray, pos: np.ndarray, vel: np.ndarray, tq: np.ndarray):
-    """Piecewise cubic Hermite: value + derivative at each knot.
-    pos (n,3), vel (n,3) → (pq (m,3), vq (m,3))."""
-    t = np.asarray(t, dtype=np.float64)
-    tq = np.asarray(tq, dtype=np.float64)
-    i1 = np.clip(np.searchsorted(t, tq, side="right"), 1, len(t) - 1)
-    i0 = i1 - 1
-    h = (t[i1] - t[i0])[:, None]
-    s = ((tq - t[i0]) / (t[i1] - t[i0]))[:, None]
-    p0, p1 = pos[i0], pos[i1]
-    m0, m1 = vel[i0] * h, vel[i1] * h
-    h00 = 2 * s**3 - 3 * s**2 + 1
-    h10 = s**3 - 2 * s**2 + s
-    h01 = -2 * s**3 + 3 * s**2
-    h11 = s**3 - s**2
-    pq = h00 * p0 + h10 * m0 + h01 * p1 + h11 * m1
-    # derivative wrt s, then /h
-    d00 = 6 * s**2 - 6 * s
-    d10 = 3 * s**2 - 4 * s + 1
-    d01 = -6 * s**2 + 6 * s
-    d11 = 3 * s**2 - 2 * s
-    vq = (d00 * p0 + d10 * m0 + d01 * p1 + d11 * m1) / h
-    return pq, vq
-
-
-def barycentric_interp(t: np.ndarray, vals: np.ndarray, tq: np.ndarray) -> np.ndarray:
-    """Barycentric Lagrange interpolation (exact degree-(n−1) polynomial
-    through all knots) — the reference's 'bary' orbit interpolator
-    (core.py:1111-1125, scipy BarycentricInterpolator semantics).
-    vals (n, k) → (m, k)."""
-    t = np.asarray(t, dtype=np.float64)
-    tq = np.asarray(tq, dtype=np.float64)
-    V = np.asarray(vals, dtype=np.float64)
-    n = len(t)
-    # barycentric weights w_j = 1 / prod_{i≠j}(t_j - t_i), scaled for
-    # conditioning (only ratios matter)
-    diff = t[:, None] - t[None, :]
-    np.fill_diagonal(diff, 1.0)
-    scale = (t.max() - t.min()) / 4.0
-    w = 1.0 / np.prod(diff / scale, axis=1)
-    d = tq[:, None] - t[None, :]  # (m, n)
-    exact = d == 0
-    d = np.where(exact, 1.0, d)
-    c = w[None, :] / d  # (m, n)
-    out = (c @ V) / c.sum(axis=1, keepdims=True)
-    hit_rows, hit_cols = np.nonzero(exact)
-    out[hit_rows] = V[hit_cols]
-    return out
-
-
-def polynomial_interp(t: np.ndarray, vals: np.ndarray, tq: np.ndarray, deg: int = 5) -> np.ndarray:
-    """Degree-5 least-squares polynomial fit per component — the
-    reference's 'poly' orbit interpolator (core.py:1128-1149,
-    numpy Polynomial.fit(t, ·, 5) semantics, incl. its internal domain
-    scaling). vals (n, k) → (m, k)."""
-    from numpy.polynomial import Polynomial
-
-    t = np.asarray(t, dtype=np.float64)
-    tq = np.asarray(tq, dtype=np.float64)
-    V = np.asarray(vals, dtype=np.float64)
-    cols = [Polynomial.fit(t, V[:, k], deg)(tq) for k in range(V.shape[1])]
-    return np.vstack(cols).T
-
-
-def orbit_interpolate(
-    t: np.ndarray,
-    pos: np.ndarray,
-    vel: np.ndarray,
-    tq: np.ndarray,
-    method: str = "chspline",
-):
-    """Dispatch over the reference's orbit_interpolator option
-    (core.py:398, 448-453: 'chspline' | 'bary' | 'poly'). Returns
-    (positions (m,3), velocities (m,3))."""
-    if method == "chspline":
-        return hermite_interp(t, pos, vel, tq)
-    if method == "bary":
-        return barycentric_interp(t, pos, tq), barycentric_interp(t, vel, tq)
-    if method == "poly":
-        return polynomial_interp(t, pos, tq), polynomial_interp(t, vel, tq)
-    raise ValueError(
-        f"unknown orbit interpolator {method!r} (chspline | bary | poly)"
-    )
-
-
-T_PAD = 360.0  # seconds, core.py:441-446
-
-
-def sv_window(t: np.ndarray, t_start: float, t_end: float, t_pad: float = T_PAD) -> np.ndarray:
-    """Boolean mask selecting state vectors within [start-pad, end+pad]."""
-    t = np.asarray(t, dtype=np.float64)
-    return (t >= t_start - t_pad) & (t <= t_end + t_pad)

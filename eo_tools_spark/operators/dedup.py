@@ -906,7 +906,6 @@ def decontaminate(
     bench_text_col: str | None = None,
     bench_id_col: str = "bench_id",
     token_hash: str = "fast",
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: corpus documents sharing ≥
     ``min_shared`` winnowing fingerprints with any benchmark/eval
@@ -925,8 +924,7 @@ def decontaminate(
     frame is BROADCAST — the corpus fingerprint stream is consumed
     map-side by the join and never shuffles; the only exchange is the
     groupBy over MATCHED rows (bounded by true contamination, not
-    corpus size). Set ``broadcast_bench=False`` only if the benchmark
-    side is itself huge (falls back to a shuffle equi-join on fp).
+    corpus size).
 
     ``token_hash``: 'fast' (Arrow SipHash, production) or 'sql' (the
     dual-dialect md5 family, reproducible in DuckDB — the driver
@@ -940,10 +938,8 @@ def decontaminate(
         )
     cf = _winnow_fp_frame(corpus, k, w, text_col, id_col, token_hash)
     bf = _winnow_fp_frame(benchmark, k, w, bench_text_col, bench_id_col, token_hash)
-    if broadcast_bench:
-        bf = F.broadcast(bf)
     return (
-        cf.join(bf, "fp")
+        cf.join(F.broadcast(bf), "fp")
         .groupBy(id_col, bench_id_col)
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)

@@ -43,7 +43,6 @@ def bbox_intersect_join(
     right: DataFrame,
     res: int = 7,
     buffer_deg: float = 0.0,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Inner join on closed-interval bbox overlap, left bbox optionally
     buffered by ``buffer_deg`` (reference: buffer_arc_sec/3600).
@@ -58,8 +57,7 @@ def bbox_intersect_join(
             lb = lb.withColumn(c, F.col(c) + s * buffer_deg)
     lc = with_bbox_cells(lb, res)
     rc = with_bbox_cells(right, res, prefix="t_")
-    rcj = F.broadcast(rc) if broadcast_right else rc
-    cand = lc.join(rcj, "_cell")
+    cand = lc.join(F.broadcast(rc), "_cell")
     # reference-point dedup (no distinct/shuffle): a matching pair is
     # emitted only by the cell containing the intersection's min corner,
     # which both sides' covers always include

@@ -11,8 +11,6 @@ bands share one grid) packing interleaved RGB bytes per tile.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F

@@ -1,16 +1,14 @@
-"""Annotation / calibration / orbit XML ETL → typed side tables.
+"""Annotation XML ETL → typed side tables.
 
 The reference reads Sentinel-1 annotation XML with xmltodict
 (/root/reference/eo_tools/S1/core.py:1078-1083 read_metadata) and picks
 fields out of the nested dict (core.py:184-212 swath init,
-core.py:206-212 + 652-672 calibration vectors, core.py:228-262 EOF
-orbit parse, /root/reference/eo_tools/auxils.py:58-97 geolocation
-grid). This module re-implements that ETL with the stdlib only
-(``xml_to_dict`` mirrors xmltodict's conventions: ``@attr`` keys,
-``#text`` for text alongside attributes, repeated tags → lists), then
-exposes the typed rows the engine's operators consume (deramp_constants
-inputs, valid-sample masks, calibration grids, orbit state vectors,
-geolocation-grid burst quads).
+eo_tools/auxils.py:58-97 geolocation grid). This module
+re-implements that ETL with the stdlib only (``xml_to_dict`` mirrors
+xmltodict's conventions: ``@attr`` keys, ``#text`` for text alongside
+attributes, repeated tags → lists), then exposes the typed rows the
+engine consumes (swath timing, valid-sample bounds, Doppler polynomial
+tables, geolocation-grid burst quads).
 
 Scale shape: one annotation XML is ~1 MB per (product, subswath, pol) —
 side data, not pixel data. The ``annotation_etl`` driver query runs
@@ -21,9 +19,6 @@ against a DuckDB oracle.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from datetime import datetime, timezone
-
-import numpy as np
 
 
 # --------------------------------------------------- xmltodict-compatible
@@ -68,19 +63,6 @@ def _text(x) -> str:
     return x["#text"] if isinstance(x, dict) else x
 
 
-def iso_seconds(ts: str, t0: datetime | None = None) -> float:
-    """ISO timestamp → seconds (since t0 when given, else epoch) — the
-    isoparse + total_seconds() convention of core.py:571-575."""
-    t = datetime.fromisoformat(ts)
-    if t.tzinfo is None:
-        t = t.replace(tzinfo=timezone.utc)
-    if t0 is None:
-        t0 = datetime(1970, 1, 1, tzinfo=timezone.utc)
-    elif t0.tzinfo is None:
-        t0 = t0.replace(tzinfo=timezone.utc)
-    return (t - t0).total_seconds()
-
-
 # ------------------------------------------------------------ annotation
 
 def parse_annotation(text: str) -> dict:
@@ -90,8 +72,8 @@ def parse_annotation(text: str) -> dict:
     - swathTiming scalars (core.py:186-189)
     - burst list: azimuthTime, firstValidSample/lastValidSample int
       arrays (core.py:704-725 masking inputs)
-    - imageInformation / productInformation scalars — the
-      deramp_constants inputs (core.py:554-576)
+    - imageInformation / productInformation scalars — the reference's
+      deramp inputs (core.py:554-576)
     - azimuthFmRateList + dcEstimateList polynomial tables
       (core.py:586-623)
     - geolocationGridPointList (auxils.py:58-73 semantics)
@@ -162,44 +144,6 @@ def parse_annotation(text: str) -> dict:
         "dc_estimate": dc,
         "geolocation_grid": grid,
     }
-
-
-def parse_calibration(text: str) -> dict:
-    """Calibration XML → beta_nought scalar + sigma grid
-    (core.py:206-212: beta = first value of calvec[0].betaNought;
-    core.py:652-668: rows = vector lines, cols = calvec[0].pixel,
-    grid = per-vector sigmaNought values)."""
-    cal = xml_to_dict(text)["calibration"]
-    vecs = _as_list(cal["calibrationVectorList"]["calibrationVector"])
-    beta = float(_text(vecs[0]["betaNought"]).split(" ")[0])
-    pixels = [int(p) for p in _text(vecs[0]["pixel"]).split(" ")]
-    lines = [int(_text(v["line"])) for v in vecs]
-    sigma = [[float(s) for s in _text(v["sigmaNought"]).split(" ")] for v in vecs]
-    return {
-        "beta_nought": beta,
-        "lines": lines,
-        "pixels": pixels,
-        "sigma": sigma,
-    }
-
-
-def parse_orbit_eof(text: str) -> dict:
-    """EOF orbit XML → state-vector arrays, the exact reference layout
-    (core.py:241-262): Earth_Explorer_File → Data_Block → List_of_OSVs →
-    OSV rows; UTC fields carry a 'UTC=' prefix stripped via [4:]; t is
-    seconds since the FIRST OSV's UTC."""
-    d = xml_to_dict(text)
-    osvs = _as_list(
-        d["Earth_Explorer_File"]["Data_Block"]["List_of_OSVs"]["OSV"]
-    )
-    t0 = datetime.fromisoformat(_text(osvs[0]["UTC"])[4:])
-    out = {
-        "t0": t0,
-        "t": np.array([iso_seconds(_text(o["UTC"])[4:], t0) for o in osvs]),
-    }
-    for k in ("x", "y", "z", "vx", "vy", "vz"):
-        out[k] = np.array([float(_text(o[k.upper()])) for o in osvs])
-    return out
 
 
 def location_grid_burst_count(grid: list[dict]) -> int:

@@ -1,16 +1,13 @@
-"""Annotation / calibration / orbit XML ETL vs golden reference values
+"""Annotation XML ETL vs golden reference values
 (mirrors /root/reference/tests/test_s1_core.py:23-34 fixture numbers:
 start_time 2023-09-04T06:37:31.072288, lines_per_burst 1507,
-samples_per_burst 23055, burst_count 9, beta_nought 237.0)."""
+samples_per_burst 23055, burst_count 9)."""
 
-import numpy as np
 import pytest
 
 from eo_tools_spark.sources.annotation import (
     location_grid_burst_count,
     parse_annotation,
-    parse_calibration,
-    parse_orbit_eof,
     xml_to_dict,
 )
 
@@ -86,51 +83,6 @@ def annotation_xml(burst_count=9, lines_per_burst=1507):
     </product>"""
 
 
-def calibration_xml():
-    return """<?xml version="1.0"?>
-    <calibration>
-      <calibrationVectorList count="3">
-        <calibrationVector>
-          <line>0</line>
-          <pixel count="3">0 10 20</pixel>
-          <sigmaNought count="3">4.0 5.0 6.0</sigmaNought>
-          <betaNought count="3">2.370000e+02 2.370000e+02 2.370000e+02</betaNought>
-        </calibrationVector>
-        <calibrationVector>
-          <line>100</line>
-          <pixel count="3">0 10 20</pixel>
-          <sigmaNought count="3">7.0 8.0 9.0</sigmaNought>
-          <betaNought count="3">2.370000e+02 2.370000e+02 2.370000e+02</betaNought>
-        </calibrationVector>
-        <calibrationVector>
-          <line>200</line>
-          <pixel count="3">0 10 20</pixel>
-          <sigmaNought count="3">1.0 2.0 3.0</sigmaNought>
-          <betaNought count="3">2.370000e+02 2.370000e+02 2.370000e+02</betaNought>
-        </calibrationVector>
-      </calibrationVectorList>
-    </calibration>"""
-
-
-def orbit_eof_xml():
-    osvs = "\n".join(
-        f"""<OSV>
-          <UTC>UTC=2023-09-04T06:3{5 + i // 6}:{(i * 10) % 60:02d}.000000</UTC>
-          <X unit="m">{7e6 + 1000 * i}</X><Y unit="m">{100.0 * i}</Y><Z unit="m">{50.0 * i}</Z>
-          <VX unit="m/s">{7000.0}</VX><VY unit="m/s">{10.0 * i}</VY><VZ unit="m/s">{5.0}</VZ>
-        </OSV>"""
-        for i in range(10)
-    )
-    return f"""<?xml version="1.0"?>
-    <Earth_Explorer_File>
-      <Data_Block type="xml">
-        <List_of_OSVs count="10">
-        {osvs}
-        </List_of_OSVs>
-      </Data_Block>
-    </Earth_Explorer_File>"""
-
-
 class TestXmlToDict:
     def test_xmltodict_conventions(self):
         d = xml_to_dict('<a x="1"><b>t</b><c n="2">v</c><b>u</b></a>')
@@ -182,74 +134,6 @@ class TestAnnotationGolden:
         p = a["geolocation_grid"][0]
         assert (p["line"], p["pixel"]) == (0, 0)
         assert p["lat"] == pytest.approx(40.0) and p["lon"] == pytest.approx(2.0)
-
-
-class TestCalibrationGolden:
-    def test_beta_nought_fixture(self):
-        c = parse_calibration(calibration_xml())
-        assert c["beta_nought"] == 2.37e2  # test_s1_core.py:33 golden
-
-    def test_sigma_grid(self):
-        c = parse_calibration(calibration_xml())
-        assert c["lines"] == [0, 100, 200]
-        assert c["pixels"] == [0, 10, 20]
-        assert c["sigma"][1] == [7.0, 8.0, 9.0]
-
-    def test_sigma_grid_feeds_calibration_operator(self):
-        from eo_tools_spark.operators.slc import sigma_calibration_grid
-
-        c = parse_calibration(calibration_xml())
-        grid = sigma_calibration_grid(
-            np.array(c["lines"]), np.array(c["pixels"]), np.array(c["sigma"]),
-            first_line=0, naz=3, nrg=3,
-        )
-        # exact at grid nodes
-        assert grid[0, 0] == pytest.approx(4.0)
-
-
-class TestOrbitEOF:
-    def test_state_vector_parse(self):
-        sv = parse_orbit_eof(orbit_eof_xml())
-        assert sv["t"][0] == 0.0
-        assert sv["t"][1] == pytest.approx(10.0)  # UTC= prefix stripped
-        assert sv["x"][3] == pytest.approx(7e6 + 3000)
-        assert sv["vx"][0] == pytest.approx(7000.0)
-        assert len(sv["t"]) == 10
-
-    def test_feeds_deramp_constants(self):
-        """ETL output plugs straight into the deramp chain — closing the
-        'kernel, not operator' gap from round 1."""
-        from eo_tools_spark.operators.slc import deramp_constants, iso_burst_t0
-
-        a = parse_annotation(annotation_xml())
-        sv = parse_orbit_eof(orbit_eof_xml())
-        t0_az = iso_burst_t0(a["bursts"][0]["azimuth_time"], sv["t0"])
-        kt, eta_ref, eta = deramp_constants(
-            sv_t=sv["t"],
-            sv_pos=np.stack([sv["x"], sv["y"], sv["z"]], 1),
-            sv_vel=np.stack([sv["vx"], sv["vy"], sv["vz"]], 1),
-            t0_az=t0_az,
-            lines_per_burst=a["lines_per_burst"],
-            azimuth_time_interval=a["azimuth_time_interval"],
-            range_sampling_rate=a["range_sampling_rate"],
-            slant_range_time=a["slant_range_time"],
-            nrg=a["number_of_samples"],
-            azimuth_steering_rate_deg=a["azimuth_steering_rate"],
-            radar_frequency=a["radar_frequency"],
-            fm_times=np.array(
-                [iso_burst_t0(p["azimuth_time"], sv["t0"]) for p in a["fm_rate"]]
-            ),
-            fm_coeffs=np.array([p["coeffs"] for p in a["fm_rate"]]),
-            dc_times=np.array(
-                [iso_burst_t0(p["azimuth_time"], sv["t0"]) for p in a["dc_estimate"]]
-            ),
-            dc_coeffs=np.array([p["coeffs"] for p in a["dc_estimate"]]),
-        )
-        assert kt.shape == (23055,) and eta_ref.shape == (23055,)
-        assert np.isfinite(kt).all() and np.isfinite(eta_ref).all()
-        assert len(eta) == 1507
-        # ka < 0, ks > 0 → kt = ka·ks/(ka−ks) must be positive
-        assert (kt > 0).all()
 
 
 class TestBurstPolygons:

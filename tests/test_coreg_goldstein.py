@@ -1,16 +1,10 @@
-"""Coregistration, topographic phase, orbit Hermite interpolation,
-block_process law, Goldstein filter."""
+"""Coregistration, block_process law, Goldstein filter."""
 
 import numpy as np
 import pytest
 
 from eo_tools_spark.functions import raster as R
-from eo_tools_spark.operators.coreg import (
-    coregister,
-    hermite_interp,
-    phi_topo,
-    sv_window,
-)
+from eo_tools_spark.operators.coreg import coregister
 
 
 class TestCoregister:
@@ -175,41 +169,6 @@ class TestCoregProject:
         np.testing.assert_allclose(got_az, exp_az, rtol=1e-12, equal_nan=True)
 
 
-class TestPhiTopo:
-    def test_formula(self):
-        # Sentinel-1 C-band-ish constants
-        freq = 5.405e9
-        srt = 5.3e-3
-        fsr = 64.345e6
-        rg = np.array([0.0, 1.0])
-        ph = phi_topo(rg, freq, srt, fsr)
-        lam = 299792458.0 / freq
-        r0 = srt * 299792458.0 / 2
-        dr = 299792458.0 / (2 * fsr)
-        assert ph[0] == pytest.approx(4 * np.pi / lam * r0)
-        assert ph[1] - ph[0] == pytest.approx(4 * np.pi / lam * dr)
-
-
-class TestHermite:
-    def test_exact_on_cubic(self):
-        """Hermite reproduces a cubic exactly (same property scipy's
-        CubicHermiteSpline provides to the reference interpolator)."""
-        t = np.linspace(0, 10, 6)
-        def f(t): return 0.5 * t**3 - 2 * t**2 + 3 * t + 1
-        def df(t): return 1.5 * t**2 - 4 * t + 3
-        pos = np.stack([f(t), 2 * f(t), -f(t)], axis=1)
-        vel = np.stack([df(t), 2 * df(t), -df(t)], axis=1)
-        tq = np.linspace(0.3, 9.7, 23)
-        pq, vq = hermite_interp(t, pos, vel, tq)
-        np.testing.assert_allclose(pq[:, 0], f(tq), rtol=1e-12)
-        np.testing.assert_allclose(vq[:, 1], 2 * df(tq), rtol=1e-10)
-
-    def test_sv_window(self):
-        t = np.arange(0, 5000, 10.0)
-        m = sv_window(t, 1000.0, 1200.0)
-        assert t[m].min() == 640.0 and t[m].max() == 1560.0  # ±360 s
-
-
 class TestBlockProcess:
     def test_law_pointwise_no_overlap(self):
         """block_process ≡ global op for pointwise fn
@@ -258,59 +217,3 @@ class TestGoldstein:
         )[32:-32, 32:-32].astype(np.complex64)
         np.testing.assert_allclose(got, exp, rtol=1e-4, atol=1e-5)
 
-
-class TestOrbitInterpolators:
-    """Reference orbit_interpolator options (core.py:398, 448-453,
-    1095-1149): chspline / bary / poly."""
-
-    def make_orbit(self):
-        # exact cubic trajectory: all three interpolators must recover
-        # it exactly (Hermite is C1-exact on cubics, barycentric is
-        # exact on any poly through the knots, deg-5 LSQ fits exactly)
-        t = np.linspace(0.0, 90.0, 10)
-        pos = np.stack(
-            [1e6 + 7e3 * t - 0.5 * t**2 + 1e-3 * t**3,
-             2e5 + 50.0 * t + 0.1 * t**2,
-             -3e5 + 10.0 * t],
-            axis=1,
-        )
-        vel = np.stack(
-            [7e3 - 1.0 * t + 3e-3 * t**2, 50.0 + 0.2 * t, np.full_like(t, 10.0)],
-            axis=1,
-        )
-        return t, pos, vel
-
-    @pytest.mark.parametrize("method", ["chspline", "bary", "poly"])
-    def test_exact_on_polynomial_orbit(self, method):
-        from eo_tools_spark.operators.coreg import orbit_interpolate
-
-        t, pos, vel = self.make_orbit()
-        tq = np.array([7.3, 33.3, 61.7, 88.8])
-        pq, vq = orbit_interpolate(t, pos, vel, tq, method)
-        exp_p = np.stack(
-            [1e6 + 7e3 * tq - 0.5 * tq**2 + 1e-3 * tq**3,
-             2e5 + 50.0 * tq + 0.1 * tq**2,
-             -3e5 + 10.0 * tq],
-            axis=1,
-        )
-        np.testing.assert_allclose(pq, exp_p, rtol=1e-9)
-        exp_v = np.stack(
-            [7e3 - 1.0 * tq + 3e-3 * tq**2, 50.0 + 0.2 * tq, np.full_like(tq, 10.0)],
-            axis=1,
-        )
-        np.testing.assert_allclose(vq, exp_v, rtol=1e-9)
-
-    @pytest.mark.parametrize("method", ["chspline", "bary", "poly"])
-    def test_knots_reproduced(self, method):
-        from eo_tools_spark.operators.coreg import orbit_interpolate
-
-        t, pos, vel = self.make_orbit()
-        pq, _ = orbit_interpolate(t, pos, vel, t.copy(), method)
-        np.testing.assert_allclose(pq, pos, rtol=1e-9)
-
-    def test_unknown_method_raises(self):
-        from eo_tools_spark.operators.coreg import orbit_interpolate
-
-        t, pos, vel = self.make_orbit()
-        with pytest.raises(ValueError):
-            orbit_interpolate(t, pos, vel, np.array([1.0]), "spline9000")

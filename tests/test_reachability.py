@@ -8,6 +8,10 @@ callers, f-string expressions are) through the top-level definitions of
 references and input builders for live operators, plus the eo_tools
 ports still queued for deletion. Anything else is code that only its
 own tests call — delete it with those tests, or give it a caller.
+
+A second pass checks every package module (``__init__.py`` re-exports
+aside) for imported names that the module never uses, so a deletion
+does not leave its imports behind.
 """
 
 import ast
@@ -25,14 +29,6 @@ KEPT = {
     "terrain_scatter_oracle": "numpy reference that scatter_accumulate is checked against",
     "ICEBERG_MAPPING": "the snapshot-to-Iceberg seam contract test_snapshots pins",
     "cell_parent": "reference for the cell_of_points nesting invariant",
-    # operators/slc.py: SLC window/mask/calibration and TOPS deramp chain
-    **dict.fromkeys([
-        "window_first_line", "read_window", "apply_valid_mask",
-        "sigma_calibration_grid", "calibrate", "s2_reflectance",
-        "deramp_phase", "nearest_poly_index", "iso_burst_t0", "_poly2_eval",
-        "deramp_constants", "tops_deramp_phase", "burst_read_masked",
-        "deramp_bursts",
-    ], _QUEUED),
     # operators/geocode.py: range-Doppler LUTs and DEM upsampling
     **dict.fromkeys([
         "WGS84_A", "WGS84_F", "WGS84_E2", "lla_to_ecef", "_doppler",
@@ -43,21 +39,8 @@ KEPT = {
     **dict.fromkeys(
         ["resize_nearest", "resize_bilinear_float", "resize_bilinear"], _QUEUED
     ),
-    # operators/coreg.py: topographic phase and orbit interpolation
-    **dict.fromkeys([
-        "C0", "phi_topo", "hermite_interp", "barycentric_interp",
-        "polynomial_interp", "orbit_interpolate", "T_PAD", "sv_window",
-    ], _QUEUED),
-    # sources/annotation.py: calibration/EOF parsers and burst quads
-    **dict.fromkeys([
-        "iso_seconds", "parse_calibration", "parse_orbit_eof",
-        "location_grid_burst_count", "burst_polygons",
-    ], _QUEUED),
-    # sources/orbits.py: orbit-file selection
-    **dict.fromkeys(
-        ["_EOF_RE", "_ts", "parse_orbit_name", "select_orbit_file", "fetch_orbit"],
-        _QUEUED,
-    ),
+    # sources/annotation.py: burst quads
+    **dict.fromkeys(["location_grid_burst_count", "burst_polygons"], _QUEUED),
 }
 
 
@@ -114,3 +97,29 @@ def test_only_kept_definitions_are_unreached():
     extra = {name: mod for name, mod in got.items() if name not in KEPT}
     assert not extra, f"reached only by tests (delete them or give them a caller): {extra}"
     assert set(got) == set(KEPT), f"KEPT names that are reached or gone: {set(KEPT) - set(got)}"
+
+
+def unused_imports(path):
+    """["line: name"] of the names ``path`` imports and never uses. A name
+    is used when it appears as a ``Name`` node, which is also the root of
+    every ``Attribute`` chain (``np`` in ``np.asarray``)."""
+    tree = _parse(path)
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for alias in node.names:
+                bound = alias.asname or alias.name.split(".")[0]
+                if bound != "*" and bound not in used:
+                    out.append(f"{node.lineno}: {bound}")
+    return out
+
+
+def test_no_unused_imports():
+    paths = glob.glob(os.path.join(REPO, "eo_tools_spark", "**", "*.py"), recursive=True)
+    got = {os.path.relpath(p, REPO): unused_imports(p)
+           for p in paths if os.path.basename(p) != "__init__.py"}
+    got = {mod: names for mod, names in got.items() if names}
+    assert not got, f"imported but never used: {got}"

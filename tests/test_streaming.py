@@ -1,8 +1,6 @@
 """Streaming adapter: backlog → micro-batches → snapshot commits,
 restart-safe and equal to the one-shot batch result."""
 
-import numpy as np
-
 from eo_tools_spark.sources.derived import aoi_rings
 from eo_tools_spark.sources.snapshots import SnapshotTable
 from eo_tools_spark.sources.synthetic import IMAGE_SCHEMA, images_table
@@ -24,7 +22,6 @@ def test_stream_equals_batch(spark, tmp_path):
 
     got = {(r.image_id, r.aoi_id) for r in table.read().collect()}
 
-    from eo_tools_spark.functions.spatial import tile_id_col
     from eo_tools_spark.operators.spatial_join import aoi_point_join
 
     batch = aoi_point_join(spark.read.parquet(src), aoi_rings())
